@@ -354,7 +354,7 @@ def jaccard_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
             .where("inter > 0")
             .selectExpr("*", "round(inter / (size(_sha) + size(_shb) - inter),"
                              " 4) AS jaccard")
-            .where(f"jaccard >= {threshold!r}D")
+            .where(f"jaccard >= {float(threshold)!r}D")
             .select("a", "b", "jaccard"))
 
 

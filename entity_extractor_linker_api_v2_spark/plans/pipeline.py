@@ -2,8 +2,9 @@
 
 docs → extract_text (pandas UDF) → detect_mentions (pandas UDF) → explode →
 dedup/cap → link (alias join + priority window) → entities → triples/nodes/
-stats.  One DataFrame lineage; every former network boundary of the
-reference is a broadcast or a shuffle here.
+stats.  Every former network boundary of the reference is a broadcast or
+a shuffle here; the entity relation is materialized once per call, and
+every output is derived from it.
 """
 
 from __future__ import annotations
@@ -120,92 +121,92 @@ def run_pipeline(spark: SparkSession, sf_dir: str, max_entities: int = 10,
                  n_salt: int = 0, use_html: bool = True,
                  fused: bool = False, mode: str = "extract",
                  split_threshold: int | None = None) -> dict[str, DataFrame]:
-    """Returns all materialized stage outputs (lazy DataFrames)."""
+    """``pipeline_from_docs`` over the corpus at ``sf_dir``."""
     docs = tables.docs_table(spark, sf_dir, with_html=use_html)
     return pipeline_from_docs(spark, docs, max_entities=max_entities,
                               n_salt=n_salt, use_html=use_html, fused=fused,
                               mode=mode, split_threshold=split_threshold)
 
 
+def fused_lineage(spark: SparkSession, docs: DataFrame, max_entities: int = 10,
+                  resolved: DataFrame | None = None) -> tuple[DataFrame, DataFrame]:
+    """The fused throughput path as lazy (mentions, entities) frames: one
+    mapInPandas does html→text→mentions→per-doc dedup/cap (single Arrow
+    round trip, no corpus shuffle), and the linking dimension is
+    precomputed over the gazetteer label universe and broadcast — the
+    corpus side is map-only.  ``pipeline_from_docs(fused=True)`` runs
+    exactly this lineage; the plan audit explains it."""
+    from .. import fixtures
+    from ..operators.extract import extract_and_detect
+    ments = extract_and_detect(docs, dedup=True, max_entities=max_entities)
+    if resolved is None:
+        resolved = linking.resolve_label_universe(
+            spark, [lbl for _, lbl, _ in fixtures.GAZETTEER])
+    return ments, linking.link_mentions_precomputed(ments, resolved)
+
+
 def pipeline_from_docs(spark: SparkSession, docs: DataFrame, max_entities: int = 10,
                        n_salt: int = 0, use_html: bool = True,
-                       persist_mentions: bool = True,
                        fused: bool = False,
                        resolved: DataFrame | None = None,
                        mode: str = "extract",
                        split_threshold: int | None = None) -> dict[str, DataFrame]:
+    """Every pipeline output, derived from one materialization of the
+    entity relation.
+
+    Each call runs its layers once, at call time: extraction, linking and
+    the entity relation are computed into an eager ``localCheckpoint``,
+    and triples, nodes and the four stats are lazy frames over that
+    checkpoint, so writing the sinks and collecting the stats never re-run
+    the scan, extraction or resolution.  The materialized rows last as
+    long as the returned frames (Spark's ContextCleaner frees them once
+    those are garbage).  A local checkpoint, not a ``persist``: the
+    CacheManager matches a persist by plan, so a second call on the same
+    corpus would silently reuse the first call's rows.  The mentions are
+    persisted only while the entities are built (they feed both the
+    distinct-key probe and the join-back) and released before returning;
+    the returned ``mentions`` frame is lazy."""
     if mode not in ("extract", "generate"):
         raise ValueError(f"Unknown mode: {mode}")  # ref linker.py:135-137
-    if mode == "generate":
-        # mode="generate" (ref linker.py:128-135 -> generate_entities): the
-        # mention stage proposes RELATED KB titles instead of text spans;
-        # every downstream stage is shared with extract mode.
-        from ..operators.generate import generate_mentions
-        gdocs = docs
-        if use_html:
-            gdocs = extract_stage(docs).withColumnRenamed("extracted_text", "gen_text")
-            ments = generate_mentions(gdocs, max_entities=max_entities,
-                                      text_col="gen_text")
-        else:
-            ments = generate_mentions(gdocs, max_entities=max_entities,
-                                      text_col="body_text")
-        entities = linking.link_mentions(spark, ments.persist(), n_salt=n_salt)
-        return {
-            "docs": docs, "mentions": ments, "entities": entities,
-            "triples": T.emit_triples(entities),
-            "nodes": T.nodes_table(entities),
-            "types_distribution": S.types_distribution(entities),
-            "top10_categories": S.top10(entities, "categories"),
-            "linked_stats": S.linked_stats(entities),
-            "extraction_stats": S.extraction_stats(entities),
-        }
-    if fused and use_html:
-        # throughput path: one mapInPandas does html→text→mentions→per-doc
-        # dedup/cap (single Arrow round trip, no corpus shuffle), and the
-        # linking dimension is precomputed over the gazetteer label universe
-        # and broadcast — the whole pipeline is map-only.  The composable
-        # two-UDF path below is the stage-inspectable default and the
-        # oracle-parity surface; equivalence is pytest-asserted.
-        from .. import fixtures
-        from ..operators.extract import extract_and_detect
-        ments = extract_and_detect(docs, dedup=True, max_entities=max_entities)
-        if resolved is None:
-            resolved = linking.resolve_label_universe(
-                spark, [lbl for _, lbl, _ in fixtures.GAZETTEER])
-        entities = linking.link_mentions_precomputed(ments, resolved)
-        triples = T.emit_triples(entities)
-        nodes = T.nodes_table(entities)
-        return {
-            "docs": docs, "mentions": ments, "entities": entities,
-            "triples": triples, "nodes": nodes,
-            "types_distribution": S.types_distribution(entities),
-            "top10_categories": S.top10(entities, "categories"),
-            "linked_stats": S.linked_stats(entities),
-            "extraction_stats": S.extraction_stats(entities),
-        }
+    if fused and use_html and mode == "extract":
+        # the composable two-UDF path below is the stage-inspectable
+        # default and the oracle-parity surface; equivalence is
+        # pytest-asserted
+        ments, entities = fused_lineage(spark, docs, max_entities, resolved)
+        entities = entities.localCheckpoint()
     else:
-        if use_html:
-            docs = extract_stage(docs)
-            text_col = "extracted_text"
+        if mode == "generate":
+            # mode="generate" (ref linker.py:128-135 -> generate_entities):
+            # the mention stage proposes RELATED KB titles instead of text
+            # spans; every downstream stage is shared with extract mode.
+            from ..operators.generate import generate_mentions
+            if use_html:
+                gdocs = extract_stage(docs).withColumnRenamed(
+                    "extracted_text", "gen_text")
+                ments = generate_mentions(gdocs, max_entities=max_entities,
+                                          text_col="gen_text")
+            else:
+                ments = generate_mentions(docs, max_entities=max_entities,
+                                          text_col="body_text")
         else:
-            text_col = "body_text"
-        ments = mention_stage(docs, max_entities=max_entities, text_col=text_col,
-                              split_threshold=split_threshold)
-    if persist_mentions:
-        # the mention table feeds both the distinct-key probe side and the
-        # join-back; persisting avoids re-running the two pandas-UDF stages.
-        # At cluster scale this is the stage-checkpoint boundary instead
-        # (sources.checkpoint.StageCheckpoint).
+            if use_html:
+                docs = extract_stage(docs)
+                text_col = "extracted_text"
+            else:
+                text_col = "body_text"
+            ments = mention_stage(docs, max_entities=max_entities,
+                                  text_col=text_col,
+                                  split_threshold=split_threshold)
         ments = ments.persist()
-    entities = linking.link_mentions(spark, ments, n_salt=n_salt)
-    triples = T.emit_triples(entities)
-    nodes = T.nodes_table(entities)
+        entities = linking.link_mentions(spark, ments,
+                                         n_salt=n_salt).localCheckpoint()
+        ments.unpersist()
     return {
         "docs": docs,
         "mentions": ments,
         "entities": entities,
-        "triples": triples,
-        "nodes": nodes,
+        "triples": T.emit_triples(entities),
+        "nodes": T.nodes_table(entities),
         "types_distribution": S.types_distribution(entities),
         "top10_categories": S.top10(entities, "categories"),
         "linked_stats": S.linked_stats(entities),

@@ -31,9 +31,10 @@ def plan_of(df) -> str:
 
 
 def main() -> None:
-    from entity_extractor_linker_api_v2_spark.plans.pipeline import run_pipeline
+    from entity_extractor_linker_api_v2_spark.plans.pipeline import fused_lineage
     from entity_extractor_linker_api_v2_spark.plans.queries import QUERIES
     from entity_extractor_linker_api_v2_spark.session import get_spark
+    from entity_extractor_linker_api_v2_spark.sources import tables
 
     spark = get_spark(master="local[4]", shuffle_partitions=4)
     sections = [HEADER]
@@ -41,13 +42,20 @@ def main() -> None:
     sections.append(
         "## Fused pipeline entities (map-only corpus side)\n\n"
         "Check: probe side is Scan → MapInPandas → BroadcastHashJoin with no\n"
-        "Exchange; the only shuffle lives in the 26-key dimension subtree.\n\n"
-        "```\n" + plan_of(run_pipeline(spark, SF, fused=True)["entities"]) + "```\n")
+        "Exchange; the 26-key dimension is resolved once per call into a\n"
+        "local checkpoint, read here as the Scan ExistingRDD under the\n"
+        "BroadcastExchange.  pipeline_from_docs(fused=True) checkpoints\n"
+        "this lineage.\n\n"
+        "```\n" + plan_of(fused_lineage(spark, tables.docs_table(spark, SF))[1])
+        + "```\n")
 
     sections.append(
         "## Linking (open-vocabulary relational path, q11)\n\n"
-        "Check: every dimension join is BroadcastHashJoin; the only wide ops\n"
-        "are the distinct on (label, lang) keys and the first-hit window.\n"
+        "Check: the join-back is a BroadcastHashJoin of the mentions with\n"
+        "the resolved keys.  link_mentions resolves the distinct (label,\n"
+        "lang) keys once per call into a local checkpoint, read here as the\n"
+        "Scan ExistingRDD under the BroadcastExchange; that resolution's own\n"
+        "plan (linking.resolve_keys) broadcasts every dimension join.\n"
         "The InMemoryRelation wrapper is the session-scoped entity cache\n"
         "(built once, consumed by the nine entity-chain queries); the\n"
         "cached plan inside it is the one audited here.\n\n"

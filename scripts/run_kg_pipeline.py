@@ -31,7 +31,6 @@ def main() -> None:
     ap.add_argument("--out", required=True)
     ap.add_argument("--checkpoint", default=None)
     ap.add_argument("--max-entities", type=int, default=10)
-    ap.add_argument("--fused", action="store_true", default=True)
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
@@ -45,7 +44,7 @@ def main() -> None:
                                         max_entities=args.max_entities)
     else:
         out = run_pipeline(spark, args.sf_dir, max_entities=args.max_entities,
-                           fused=args.fused)
+                           fused=True)
 
     stats = {}
     for name in ("entities", "triples", "nodes"):

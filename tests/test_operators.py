@@ -47,6 +47,11 @@ def test_minhash_identical_docs_same_sig(spark):
     assert (1, 2) in pairs and (1, 3) not in pairs
     jac = {(r.a, r.b): r.jaccard for r in dedup.jaccard_pairs(df).collect()}
     assert jac[(1, 2)] == 1.0
+    # a numpy scalar threshold formats as a SQL double literal too
+    import numpy as np
+    jac = {(r.a, r.b): r.jaccard for r in
+           dedup.jaccard_pairs(df, threshold=np.float64(0.8)).collect()}
+    assert jac[(1, 2)] == 1.0
 
 
 def test_lsh_short_doc_excluded(spark):

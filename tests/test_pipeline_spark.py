@@ -240,3 +240,57 @@ def test_replicate_guard_matches_url_namespace(spark):
     assert derived.select("url").distinct().count() == 10
     with _pytest.raises(ValueError, match="url namespace"):
         tables.replicate_documents(df, 11)
+
+
+def test_pipeline_materializes_each_layer_once_per_call(spark):
+    """pipeline_from_docs runs its layers at call time, once per call: the
+    returned entities are a checkpoint scan (writing the sinks and
+    collecting the stats cannot rerun extraction), a second call on the
+    same docs computes afresh instead of reusing the first call's rows, and
+    no call leaves anything in Spark's CacheManager."""
+    import io
+    from contextlib import redirect_stdout
+
+    from entity_extractor_linker_api_v2_spark.operators import linking
+    from entity_extractor_linker_api_v2_spark.plans.pipeline import (
+        pipeline_from_docs)
+    from entity_extractor_linker_api_v2_spark.sources import tables
+
+    def plan(df):
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            df.explain()
+        return buf.getvalue()
+
+    def rdd_id(df):  # a checkpointed frame's logical plan is one LogicalRDD
+        return df._jdf.queryExecution().logical().rdd().id()
+
+    def cache_empty():
+        return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+    spark.catalog.clearCache()  # other tests' caches share this session
+    docs = tables.docs_table(spark, SF_SMALL)
+    first = pipeline_from_docs(spark, docs, fused=True)
+    assert "MapInPandas" not in plan(first["entities"])
+    for name in ("triples", "nodes", "types_distribution", "linked_stats"):
+        assert "MapInPandas" not in plan(first[name]), name
+
+    sc = spark.sparkContext
+    sc.setJobGroup("second-call", "second pipeline_from_docs call")
+    try:
+        second = pipeline_from_docs(spark, docs, fused=True)
+    finally:
+        sc.setJobGroup("", "")
+    assert sc.statusTracker().getJobIdsForGroup("second-call")
+    assert rdd_id(second["entities"]) != rdd_id(first["entities"])
+    assert sorted(map(tuple, first["entities"].collect())) == \
+        sorted(map(tuple, second["entities"].collect()))
+    assert cache_empty()
+
+    composable = pipeline_from_docs(spark, docs)
+    assert "ArrowEvalPython" not in plan(composable["entities"])
+    assert cache_empty()
+    ments = composable["mentions"]
+    assert linking.link_mentions(spark, ments).count() == \
+        composable["entities"].count()
+    assert cache_empty()

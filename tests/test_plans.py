@@ -35,20 +35,31 @@ def _is_scan_floor(plan: str, tree_line: str) -> bool:
 
 def test_linking_joins_are_broadcast(spark):
     """All dimension joins in the linking stage must be broadcast — a
-    sort-merge join on the probe side would shuffle the corpus."""
+    sort-merge join on the probe side would shuffle the corpus.  The
+    key resolution is checkpointed inside link_mentions, so its lazy
+    lineage (resolve_keys) is audited on its own."""
+    from entity_extractor_linker_api_v2_spark.operators import linking
+    from entity_extractor_linker_api_v2_spark.operators.extract import extract_and_detect
     from entity_extractor_linker_api_v2_spark.plans.queries import q_entities
-    plan = _plan(q_entities(spark, SF_SMALL))
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
+    from entity_extractor_linker_api_v2_spark.sources import tables
+    keys = extract_and_detect(tables.docs_table(spark, SF_SMALL), dedup=True) \
+        .select("label", "link_lang").distinct()
+    for plan in (_plan(q_entities(spark, SF_SMALL)),
+                 _plan(linking.resolve_keys(spark, keys))):
+        assert "BroadcastHashJoin" in plan
+        assert "SortMergeJoin" not in plan
 
 
 def test_fused_pipeline_corpus_side_has_no_shuffle(spark):
     """The fused throughput path is map-only on the CORPUS side: any shuffle
     Exchange must live inside the broadcast (dimension) subtree — i.e. appear
     after the first BroadcastExchange in the plan tree.  The probe side is
-    Scan → MapInPandas → Project → BroadcastHashJoin with no Exchange."""
-    from entity_extractor_linker_api_v2_spark.plans.pipeline import run_pipeline
-    plan = _plan(run_pipeline(spark, SF_SMALL, fused=True)["entities"])
+    Scan → MapInPandas → Project → BroadcastHashJoin with no Exchange.
+    The audited plan is the lazy lineage that pipeline_from_docs(fused=True)
+    materializes (its returned entities are a checkpoint scan)."""
+    from entity_extractor_linker_api_v2_spark.plans.pipeline import fused_lineage
+    from entity_extractor_linker_api_v2_spark.sources import tables
+    plan = _plan(fused_lineage(spark, tables.docs_table(spark, SF_SMALL))[1])
     tree = plan.splitlines()
     first_bcast = next(i for i, ln in enumerate(tree) if "BroadcastExchange" in ln)
     corpus_shuffles = [ln for ln in tree[:first_bcast]
