@@ -7,19 +7,11 @@ mention labels, canonical German labels and Wikidata QIDs form a graph
 real-world entity; the canonical id is the lexicographic minimum member
 (hashed for stability).
 
-Two implementations, identical partitions (pytest-asserted on chain / hub /
-random graphs):
-
-  * ``connected_components`` — min-label propagation WITH pointer jumping
-    (each round also adopts comp(comp)): O(log diameter) rounds, one
-    groupBy-node shuffle + one comp-lookup join per round.  The default for
-    the star-shaped entity graphs here.
-  * ``connected_components_star`` — alternating small-star / large-star
-    (Kiveris et al.): the hub-safe choice at 10^12 edges — neighbor sets
-    never materialize on one row (join-based, no collect_list) and rounds
-    strictly shrink the edge relation toward the component stars.
-
-Both are driver-side loops with ``localCheckpoint()`` per round to cut
+Components come from ``connected_components_star``, alternating
+small-star / large-star (Kiveris et al.): hub-safe at 10^12 edges —
+neighbor sets never materialize on one row (join-based, no collect_list)
+and rounds strictly shrink the edge relation toward the component stars.
+It is a driver-side loop with ``localCheckpoint()`` per round to cut
 lineage (SURVEY §4.2 — no Catalyst analog, no GraphFrames dependency).
 """
 
@@ -36,47 +28,6 @@ def entity_edges(entities: DataFrame) -> DataFrame:
     e2 = (entities.where("wikidata_id != ''")
           .selectExpr("label_de AS a", "wikidata_id AS b"))
     return e1.unionByName(e2).distinct()
-
-
-def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
-    """(a, b) undirected edges → (node, comp) with comp = min member label.
-
-    Each iteration: every node adopts the min component id among itself and
-    its neighbors.  Stops at fixpoint (checked via count of changed rows) or
-    max_iter.  localCheckpoint truncates the growing plan each round.
-    """
-    # materialize the (tiny) undirected edge relation ONCE — it is joined in
-    # every round, and a lazy `und` would re-run its whole upstream lineage
-    # (the pandas extraction chain) per iteration
-    und = (edges.select("a", "b")
-           .unionByName(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
-           .localCheckpoint())
-    nodes = und.select(F.col("a").alias("node")).distinct()
-    comps = nodes.withColumn("comp", F.col("node")).localCheckpoint()
-
-    for _ in range(max_iter):
-        nbr_min = (und.join(comps, und.a == comps.node)
-                   .select(F.col("b").alias("node"), "comp")
-                   .groupBy("node").agg(F.min("comp").alias("nbr_comp")))
-        new = (comps.join(nbr_min, "node", "left")
-               .select("node", F.least("comp", F.coalesce("nbr_comp", "comp"))
-                       .alias("comp")))
-        # pointer jumping (path compression): also adopt comp(comp) — turns
-        # O(diameter) convergence into O(log diameter); without it a
-        # 60-link chain silently failed to converge inside max_iter=20
-        # (caught by the small-star/large-star equivalence test)
-        c2 = new.select(F.col("node").alias("c_node"),
-                        F.col("comp").alias("c_comp"))
-        new = (new.join(c2, new.comp == c2.c_node, "left")
-               .select("node", F.least("comp", F.coalesce("c_comp", "comp"))
-                       .alias("comp"))
-               .localCheckpoint())
-        changed = (new.alias("n").join(comps.alias("o"), "node")
-                   .filter(F.col("n.comp") != F.col("o.comp")).count())
-        comps = new
-        if changed == 0:
-            break
-    return comps
 
 
 def connected_components_star(edges: DataFrame, max_iter: int = 30,
@@ -97,9 +48,9 @@ def connected_components_star(edges: DataFrame, max_iter: int = 30,
     propagation needs O(diameter).  Node ids are strings; lexicographic
     order plays the role of the integer order in the paper.
 
-    Returns (node, comp) with comp = the component's minimum member —
-    identical partition (pytest-asserted on random graphs) to
-    ``connected_components``.
+    Returns (node, comp) with comp = the component's minimum member
+    (pytest-asserted against a BFS partition on chain / hub / random
+    graphs).
     """
     # `assume_distinct`: callers that hand in an ALREADY-materialized,
     # already-deduped edge relation (canonical_entities localCheckpoints
@@ -156,15 +107,6 @@ def connected_components_star(edges: DataFrame, max_iter: int = 30,
     comps = e.selectExpr("a AS node", "b AS comp")
     return (all_nodes.join(comps, "node", "left")
             .selectExpr("node", "coalesce(comp, node) AS comp"))
-
-
-# above this many edges the hub-safe small-star/large-star formulation is
-# the default: min-propagation's groupBy(node) materializes per-node
-# neighbor aggregates whose skew grows with hub degree, while star rounds
-# stay O(1) memory per edge.  Deliberately low so every driver-measured run
-# (sf0.01 upward — 12 edges on this gazetteer universe) exercises the path
-# that must hold at 10^12 edges.
-STAR_EDGE_THRESHOLD = 8
 
 
 # above this many batch nodes, merge_components_delta stops FORCING
@@ -246,18 +188,9 @@ def merge_components(comps: DataFrame, new_edges: DataFrame) -> DataFrame:
     return delta.unionByName(untouched)
 
 
-def canonical_entities(entities: DataFrame, max_iter: int = 20,
-                       algo: str = "auto") -> DataFrame:
+def canonical_entities(entities: DataFrame) -> DataFrame:
     """entities → (node, comp, canonical_id): every mention label / canonical
-    label / QID mapped to its component representative.
-
-    algo: "star" | "minprop" | "auto" (star iff the edge relation has ≥
-    STAR_EDGE_THRESHOLD edges — one count over the localCheckpoint'd edge
-    relation, which both algorithms materialize anyway)."""
+    label / QID mapped to its component representative."""
     edges = entity_edges(entities).localCheckpoint()
-    if algo == "auto":
-        algo = "star" if edges.count() >= STAR_EDGE_THRESHOLD else "minprop"
-    comps = (connected_components_star(edges, assume_distinct=True)
-             if algo == "star"
-             else connected_components(edges, max_iter=max_iter))
+    comps = connected_components_star(edges, assume_distinct=True)
     return comps.selectExpr("*", "sha2(comp, 256) AS canonical_id")

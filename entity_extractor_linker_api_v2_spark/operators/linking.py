@@ -17,11 +17,10 @@ Reference semantics being reproduced (file:line into /root/reference):
 
 Scale design: the mention side is first reduced to DISTINCT (label, lang)
 keys (O-30 fetch-once — this also collapses head-entity skew: distinct keys
-are unique), the redirect/alias/KB dimensions are broadcast, and the single
-potentially-skewed operation — joining resolved pages back to the mention
-fact table — is an equi-join on label that AQE skew-split handles; an
-explicit salted variant is provided for clusters where the resolved side
-exceeds broadcast size (see ``join_back``).
+are unique), the redirect/alias/KB dimensions are broadcast, and the
+resolved pages are joined back to the mention fact table by one broadcast
+equi-join on (label, link_lang) (``link_mentions_precomputed``); a
+non-broadcast plan of that join is left to AQE's skew-join split.
 """
 
 from __future__ import annotations
@@ -32,32 +31,13 @@ from pyspark.sql import functions as F
 from .. import fixtures
 from ..fixtures import aliases_df, kb_pages_df, redirects_df
 
-# Ordered variation candidates (must mirror refsem.name_variations).  Each is
-# (spark Column builder); inapplicable candidates yield NULL and are filtered.
-
-
-def _variation_array(label):
-    from ..functions.textfns import title_case
-    return F.array(
-        title_case(label),
-        F.lower(label),
-        F.upper(label),
-        F.when(label.startswith("Der "), F.expr("substring(label, 5)")),
-        F.when(label.startswith("Die "), F.expr("substring(label, 5)")),
-        F.when(label.startswith("Das "), F.expr("substring(label, 5)")),
-        F.expr("replace(label, 'ß', 'ss')"),
-        F.expr("replace(label, 'ä', 'ae')"),
-        F.expr("replace(label, 'ö', 'oe')"),
-        F.expr("replace(label, 'ü', 'ue')"),
-    )
-
 
 def _variations_sql(x: str = "label") -> str:
-    """SQL-text twin of ``_variation_array(F.col(x))`` — one expr parse
-    instead of the lambda-built Column tree's dozens of py4j round trips
-    (guide §1.2: probe construction is per-call fixed work inside the bench
-    timer).  Pytest asserts element-wise equality with the Column twin on
-    the tricky-name set (tests/test_operators.py)."""
+    """Ordered name-variation candidates of column ``x`` as one SQL
+    ``array(...)`` (must mirror refsem.name_variations); inapplicable
+    candidates are NULL and filtered by the caller.  Pytest asserts the
+    filtered, deduped array equals refsem.name_variations on the
+    tricky-name set (tests/test_operators.py)."""
     from ..functions.textfns import title_case_sql
     art = ("CASE WHEN startswith({x}, '{a} ') THEN substring({x}, 5) END"
            .format)
@@ -193,102 +173,6 @@ def pick_best(candidates: DataFrame) -> DataFrame:
             .where("_rn = 1")
             .drop("_rn", "probe", "resolved", "prio", "alias_prio")
             .withColumnRenamed("probe_lang", "hit_lang"))
-
-
-def hot_join_keys(mentions: DataFrame, key: list[str],
-                  hot_share: float = 0.01,
-                  max_hot_keys: int | None = None) -> list[tuple]:
-    """Frequency-sketch the join keys and return the HOT ones (share of the
-    fact table ≥ ``hot_share``), heaviest first.
-
-    Cost at 100 TB: ONE column-pruned pass over the fact table's key
-    columns with map-side combine — the shuffle carries at most
-    |distinct keys| × |map partitions| partial rows, never the facts.  The
-    collect is bounded by construction: at most ``floor(1/hot_share)``
-    keys can hold ≥ ``hot_share`` of the table, and ``max_hot_keys``
-    defaults to exactly that bound (round-8 advice fix: the old fixed cap
-    of 64 could silently truncate qualifying keys at shares < 1/64,
-    leaving them unsalted — the straggler the feature exists to remove).
-    Production callers that maintain table statistics can pass
-    ``hot_keys`` straight into ``join_back`` and skip this pass
-    entirely."""
-    if max_hot_keys is None:
-        max_hot_keys = int(1.0 / hot_share)
-    freq = (mentions.select(*key).groupBy(*key)
-            .agg(F.count(F.lit(1)).alias("_cnt")).persist())
-    try:
-        total = freq.agg(F.sum("_cnt")).first()[0] or 0
-        rows = (freq.filter(F.col("_cnt") >= F.lit(float(hot_share) * total))
-                .orderBy(F.desc("_cnt")).limit(max_hot_keys).collect())
-    finally:
-        freq.unpersist()
-    return [tuple(r[c] for c in key) for r in rows]
-
-
-def join_back(mentions: DataFrame, resolved: DataFrame,
-              broadcast_resolved: bool = True, n_salt: int = 0,
-              hot_keys: list[tuple] | None = None,
-              hot_share: float = 0.01, salt_all: bool = False) -> DataFrame:
-    """Attach resolved pages to the mention fact table (left join on label).
-
-    Default: broadcast the resolved side (distinct labels ≪ mentions).  When
-    it cannot broadcast at cluster scale, set n_salt>1: HOT-KEY-ONLY salting
-    (SURVEY §4 custom-work item 1) — sketch the mention key frequencies
-    (``hot_join_keys``; skipped when the caller passes ``hot_keys``), then
-    salt ONLY keys above ``hot_share`` of the fact table so a head entity
-    ("Berlin" in ~50% of pages) spreads over n_salt reducers instead of one
-    straggler, while the long tail joins plain.
-
-    The split is a CONDITIONAL salt inside one join, not a union of two
-    joins: both sides gain a ``_salt`` column that is hash(url) % n_salt /
-    explode(0..n_salt-1) for hot keys and the constant 0 otherwise, and the
-    join key widens by that one int.  Same result as the
-    hot-union-tail shape, but the fact table is scanned ONCE (a union
-    re-reads it or forces a persist) and tail rows pay only a constant-zero
-    int — not a per-row hash.  NOTE (round-8 advice): the auto-sketch is
-    itself one extra execution of the fact table's lineage — callers with
-    heavy upstream lineage should persist/checkpoint ``mentions`` first or
-    pass ``hot_keys`` explicitly (the pipeline's cached path does).  The
-    all-keys shape is what made the round-6 all-keys salt
-    (``salt_all=True``, kept for measurement contrast) lose wall clock: it
-    exploded the dimension wholesale and hashed 100% of rows to fix 0.03%
-    of keys (SKEW_CHECK.json, BENCH.md).  With no hot key found the join is
-    plain.  AQE skew-join remains the first-line backstop; this path is for
-    skew past what AQE's partition-splitting handles (a single key bigger
-    than one executor's memory).
-    """
-    import functools
-    import operator as op
-
-    key = ["label", "link_lang"]
-    if n_salt and n_salt > 1:
-        if salt_all:
-            m = mentions.withColumn(
-                "_salt", F.pmod(F.hash("url"), F.lit(n_salt)))
-            r = resolved.withColumn(
-                "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1))))
-            return m.join(r, key + ["_salt"], "left").drop("_salt")
-        if hot_keys is None:
-            hot_keys = hot_join_keys(mentions, key, hot_share=hot_share)
-        if not hot_keys:
-            return mentions.join(resolved, key, "left")
-
-        def is_hot():
-            return functools.reduce(op.or_, [
-                functools.reduce(op.and_, [
-                    F.col(c).eqNullSafe(F.lit(v)) for c, v in zip(key, k)])
-                for k in hot_keys])
-
-        m = mentions.withColumn(
-            "_salt", F.when(is_hot(), F.pmod(F.hash("url"), F.lit(n_salt)))
-                      .otherwise(F.lit(0)))
-        r = resolved.withColumn(
-            "_salt", F.explode(
-                F.when(is_hot(), F.sequence(F.lit(0), F.lit(n_salt - 1)))
-                 .otherwise(F.array(F.lit(0)))))
-        return m.join(r, key + ["_salt"], "left").drop("_salt")
-    r = F.broadcast(resolved) if broadcast_resolved else resolved
-    return mentions.join(r, key, "left")
 
 
 def to_entities(joined: DataFrame) -> DataFrame:
@@ -435,14 +319,14 @@ def link_mentions_precomputed(mentions: DataFrame, resolved: DataFrame) -> DataF
 def link_mentions(spark, mentions: DataFrame,
                   redirects: DataFrame | None = None,
                   aliases: DataFrame | None = None,
-                  kb: DataFrame | None = None,
-                  n_salt: int = 0) -> DataFrame:
+                  kb: DataFrame | None = None) -> DataFrame:
     """Full linking stage: mentions (url, link_lang, label, type, pos,
     mention_idx) → entity records.
 
     The distinct-key resolution runs once, at call time, into an eager
     ``localCheckpoint`` that lasts as long as the returned frame, so each
-    action on the entities re-runs only the join-back.  It is a local
+    action on the entities re-runs only the join-back, the broadcast
+    join of ``link_mentions_precomputed``.  It is a local
     checkpoint rather than a ``persist`` for the reason given in
     ``resolve_label_universe``; the keys cache it needs meanwhile is
     released before returning, so the call leaves the CacheManager as it
@@ -454,5 +338,4 @@ def link_mentions(spark, mentions: DataFrame,
     keys = mentions.select("label", "link_lang").distinct().cache()
     best = resolve_keys(spark, keys, redirects, aliases, kb).localCheckpoint()
     keys.unpersist()
-    joined = join_back(mentions, best, broadcast_resolved=(n_salt == 0), n_salt=n_salt)
-    return to_entities(joined)
+    return link_mentions_precomputed(mentions, best)

@@ -118,13 +118,13 @@ def run_pipeline_checkpointed(spark: SparkSession, sf_dir: str, root: str,
 
 
 def run_pipeline(spark: SparkSession, sf_dir: str, max_entities: int = 10,
-                 n_salt: int = 0, use_html: bool = True,
+                 use_html: bool = True,
                  fused: bool = False, mode: str = "extract",
                  split_threshold: int | None = None) -> dict[str, DataFrame]:
     """``pipeline_from_docs`` over the corpus at ``sf_dir``."""
     docs = tables.docs_table(spark, sf_dir, with_html=use_html)
     return pipeline_from_docs(spark, docs, max_entities=max_entities,
-                              n_salt=n_salt, use_html=use_html, fused=fused,
+                              use_html=use_html, fused=fused,
                               mode=mode, split_threshold=split_threshold)
 
 
@@ -146,7 +146,7 @@ def fused_lineage(spark: SparkSession, docs: DataFrame, max_entities: int = 10,
 
 
 def pipeline_from_docs(spark: SparkSession, docs: DataFrame, max_entities: int = 10,
-                       n_salt: int = 0, use_html: bool = True,
+                       use_html: bool = True,
                        fused: bool = False,
                        resolved: DataFrame | None = None,
                        mode: str = "extract",
@@ -198,8 +198,7 @@ def pipeline_from_docs(spark: SparkSession, docs: DataFrame, max_entities: int =
                                   text_col=text_col,
                                   split_threshold=split_threshold)
         ments = ments.persist()
-        entities = linking.link_mentions(spark, ments,
-                                         n_salt=n_salt).localCheckpoint()
+        entities = linking.link_mentions(spark, ments).localCheckpoint()
         ments.unpersist()
     return {
         "docs": docs,

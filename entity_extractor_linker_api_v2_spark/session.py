@@ -18,8 +18,8 @@ def get_spark(app_name: str = "eel-v2-spark", master: str | None = None,
               shuffle_partitions: int | None = None,
               extra_conf: dict[str, str] | None = None) -> SparkSession:
     """`extra_conf` entries are applied LAST, so callers can override any
-    default (e.g. scripts/skew_check.py re-enables the UI for the task-time
-    quantile REST probes)."""
+    default (e.g. perfbench/run.py's traced run re-enables the UI for its
+    REST-API layer metrics)."""
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or cpus

@@ -13,7 +13,7 @@ at ingest, amortized over every downstream join.
 
 This is the third linking regime, complementing:
   * broadcast join        — dimension fits in memory (the default here)
-  * salted shuffle join   — one-off join with head-key skew (`join_back`)
+  * shuffle join          — one-off join with head-key skew (AQE skew-join)
   * bucketed join         — REPEATED joins against a huge dimension
 """
 

@@ -63,17 +63,22 @@ def scan_parallel(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def _sql_str(s: str) -> str:
+    """``s`` as a SQL string literal.  Only text without quotes and
+    backslashes is embedded (asserted): a quote would end the literal and
+    a backslash would be unescaped, so the embedding is exact or fails."""
+    assert "'" not in s and "\\" not in s, f"unsafe SQL literal text: {s!r}"
+    return f"'{s}'"
+
+
 def _sentence_case_sql() -> str:
     """Per-doc fixture sentence as ONE SQL CASE expression string.  The old
     py4j when-chain cost ~20 JVM round-trips per docs_table call (~150 ms of
     pure plan-build time paid by every docs-derived query); a single
-    parsed string is one round-trip for the identical expression tree.
-    The sentences contain no quote characters (asserted), so the literal
-    embedding is exact."""
+    parsed string is one round-trip for the identical expression tree."""
     n = len(fixtures.SENTENCES)
-    assert all("'" not in s and "\\" not in s for s in fixtures.SENTENCES)
     branches = " ".join(
-        f"WHEN doc_id % {n} = {i} THEN '{s}'"
+        f"WHEN doc_id % {n} = {i} THEN {_sql_str(s)}"
         for i, s in enumerate(fixtures.SENTENCES))
     return f"CASE {branches} END"
 
@@ -136,8 +141,8 @@ def derive_docs(d: DataFrame, with_html: bool = True) -> DataFrame:
         "timestamp'2025-01-01 00:00:00' + make_interval(0,0,0,0,0,doc_id,0)"
         " AS warc_ts",
         "concat(text, ' ', " + _sentence_case_sql() + ", "
-        f"CASE WHEN doc_id % 2 = 0 THEN ' {fixtures.SKEW_SENTENCE}' "
-        "ELSE '' END) AS body_text",
+        "CASE WHEN doc_id % 2 = 0 THEN "
+        + _sql_str(" " + fixtures.SKEW_SENTENCE) + " ELSE '' END) AS body_text",
         "CASE WHEN lang = 'de' THEN 'de' ELSE 'en' END AS link_lang",
     )
     if with_html:
@@ -152,10 +157,10 @@ def derive_docs(d: DataFrame, with_html: bool = True) -> DataFrame:
         # plain attribute, so its duplication across the branches is free.
         out = out.selectExpr(
             "*",
-            "encode(concat('" + refsem._HTML_PRE + "', "
+            "encode(concat(" + _sql_str(refsem._HTML_PRE) + ", "
             "CASE WHEN contains(body_text, '&') OR contains(body_text, '<') "
             "OR contains(body_text, '>') THEN "
             "replace(replace(replace(body_text, '&', '&amp;'), "
-            "'<', '&lt;'), '>', '&gt;') ELSE body_text END, '"
-            + refsem._HTML_POST + "'), 'UTF-8') AS html")
+            "'<', '&lt;'), '>', '&gt;') ELSE body_text END, "
+            + _sql_str(refsem._HTML_POST) + "), 'UTF-8') AS html")
     return out

@@ -265,30 +265,6 @@ def main() -> None:
     finally:
         shutil.rmtree(tmp2, ignore_errors=True)
 
-    from entity_extractor_linker_api_v2_spark.operators import linking
-    ments = spark.createDataFrame(
-        [(f"u{i}", "Berlin" if i % 2 else f"L{i}", "de") for i in range(64)],
-        "url string, label string, link_lang string")
-    resolved = spark.createDataFrame(
-        [("Berlin", "de", "t0"), ("L1", "de", "t1")],
-        "label string, link_lang string, title string")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        salted = linking.join_back(ments, resolved, broadcast_resolved=False,
-                                   n_salt=8, hot_keys=[("Berlin", "de")])
-        sections.append(
-            "## Hot-key-only salted join-back (round 7)\n\n"
-            "Check: ONE join on (label, link_lang, _salt) — no hot∪tail\n"
-            "union, so the fact table is scanned once; the mention side's\n"
-            "_salt is CASE WHEN hot THEN pmod(hash(url)) ELSE 0 (tail rows\n"
-            "pay a constant int, not a hash), and the dimension side's\n"
-            "explode produces n_salt rows ONLY for hot keys (array(0)\n"
-            "otherwise).  Measured: SKEW_CHECK.json — straggle 363×→1.97×\n"
-            "AND wall ≤ plain SMJ.\n\n"
-            "```\n" + plan_of(salted) + "```\n")
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-
     sections.append(
         "## Closest-level enrich (q13, round-4 shape)\n\n"
         "Check: single Project — the levels list is a literal array of\n"

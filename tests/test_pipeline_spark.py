@@ -1,5 +1,5 @@
 """End-to-end Spark pipeline tests: golden-triple P/R, byte-identical text,
-per-operator behaviors that aren't SQL-expressible, and skew/salt equivalence."""
+per-operator behaviors that aren't SQL-expressible."""
 
 import duckdb
 import pytest
@@ -65,55 +65,14 @@ def test_entities_match_refpipe_status(pipe):
     assert not diffs, f"first diffs: {list(diffs.items())[:5]}"
 
 
-def test_salted_join_matches_broadcast(spark):
-    """Skew path (hot-key-only auto-sketch): identical entities."""
-    plain = run_pipeline(spark, SF_SMALL)["entities"]
-    salted = run_pipeline(spark, SF_SMALL, n_salt=8)["entities"]
-    cols = ["url", "label", "status", "wikidata_id", "label_de"]
-    a = {tuple(r) for r in plain.select(cols).collect()}
-    b = {tuple(r) for r in salted.select(cols).collect()}
-    assert a == b
-
-
-def _join_back_fixture(spark):
-    from entity_extractor_linker_api_v2_spark.operators import linking
-    ments = spark.createDataFrame(
-        [(f"u{i}", "Berlin" if i % 2 else f"L{i}", "de") for i in range(40)],
-        "url string, label string, link_lang string")
-    resolved = spark.createDataFrame(
-        [("Berlin", "de", "Berlin_title"), ("L1", "de", "t1"),
-         ("L4", "de", "t4")],
-        "label string, link_lang string, title string")
-    want = {tuple(r) for r in linking.join_back(ments, resolved).collect()}
-    return linking, ments, resolved, want
-
-
-def test_join_back_hot_key_variants_equivalent(spark):
-    """All four salting shapes of join_back return the same rows: plain,
-    auto-sketched hot-only, caller-provided hot_keys, and the legacy
-    all-keys salt_all contrast path."""
-    linking, ments, resolved, want = _join_back_fixture(spark)
-    for kw in (dict(broadcast_resolved=False, n_salt=4),
-               dict(broadcast_resolved=False, n_salt=4,
-                    hot_keys=[("Berlin", "de")]),
-               dict(broadcast_resolved=False, n_salt=4, salt_all=True)):
-        got = {tuple(r) for r in
-               linking.join_back(ments, resolved, **kw).collect()}
-        assert got == want, f"join_back({kw}) diverged"
-
-
-def test_join_back_no_hot_keys_joins_plain(spark):
-    """A uniform key distribution sketches to zero hot keys (every key
-    under the share threshold) and the join must degrade to the plain
-    un-salted shape — same rows, no _salt column."""
-    linking, ments, resolved, want = _join_back_fixture(spark)
-    hot = linking.hot_join_keys(ments, ["label", "link_lang"],
-                                hot_share=0.01)
-    assert ("Berlin", "de") in hot  # 50% share: the planted head key
-    out = linking.join_back(ments, resolved, broadcast_resolved=False,
-                            n_salt=4, hot_share=0.99)  # nothing qualifies
-    assert "_salt" not in out.columns
-    assert {tuple(r) for r in out.collect()} == want
+def test_docs_table_rejects_quote_in_sql_literal(spark, monkeypatch):
+    """derive_docs embeds fixture text as SQL string literals: a quote in
+    the skew sentence must trip the literal guard, not reach the parser."""
+    from entity_extractor_linker_api_v2_spark import fixtures
+    from entity_extractor_linker_api_v2_spark.sources import tables
+    monkeypatch.setattr(fixtures, "SKEW_SENTENCE", "Berlin's Mitte.")
+    with pytest.raises(AssertionError):
+        tables.docs_table(spark, SF_SMALL)
 
 
 def test_entity_cache_evicts_dirs(spark, tmp_path):

@@ -362,32 +362,6 @@ print("CACHE_OK")
     assert "CACHE_OK" in proc.stdout, proc.stderr[-2000:]
 
 
-def test_hot_salted_join_is_single_join_conditional_salt(spark):
-    """Round-7 hot-key-only salt: ONE join on (label, link_lang, _salt) —
-    no hot∪tail Union of two joins (which would scan the fact table
-    twice); the salt is a CASE WHEN so tail rows carry a constant 0."""
-    from pyspark.sql import functions as F
-
-    from entity_extractor_linker_api_v2_spark.operators import linking
-    ments = spark.createDataFrame(
-        [(f"u{i}", "Berlin" if i % 2 else f"L{i}", "de") for i in range(64)],
-        "url string, label string, link_lang string")
-    resolved = spark.createDataFrame(
-        [("Berlin", "de", "t0"), ("L1", "de", "t1")],
-        "label string, link_lang string, title string")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        out = linking.join_back(ments, resolved, broadcast_resolved=False,
-                                n_salt=8, hot_keys=[("Berlin", "de")])
-        plan = _plan(out)
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    tree = plan.partition("\n\n(1)")[0]  # node names repeat in the detail
-    assert tree.count("SortMergeJoin") + tree.count("ShuffledHashJoin") == 1
-    assert "Union" not in tree
-    assert tree.count("Generate") == 1  # the dimension-side explode only
-
-
 def test_affected_components_state_prunes_before_aggregation(spark):
     """Round-7 fold read: the latest-wins HashAggregates must sit ABOVE
     broadcast semi-join filters of the raw delta scan — aggregating the
