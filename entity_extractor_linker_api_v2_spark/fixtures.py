@@ -6,7 +6,10 @@ test suite (see FIXTURES.md; citations: /root/reference/tests/test_linker.py:18-
 tests/test_wikipedia_service.py:18-49, tests/test_wikipedia_fallbacks.py:84-370).
 
 The same constants are rendered two ways:
-  * `*_df(spark)`    — Spark DataFrames (broadcast dimension side)
+  * `*_df(spark)`    — Spark DataFrames (broadcast dimension side), each a
+                       ``LocalRelation`` built by ``session.local_table``: the
+                       rows reach the JVM once, as Arrow batches, and the
+                       frame carries a size estimate
   * `*_cte()`        — DuckDB SQL CTE text (driver oracle side)
 so the driver's Spark-vs-DuckDB comparison exercises identical inputs.
 
@@ -16,6 +19,7 @@ Everything is seed-free and order-stable: pure literals + derivations.
 from __future__ import annotations
 
 from . import refsem
+from .session import local_table
 
 # ---------------------------------------------------------------------------
 # KB pages: one row per (title, lang).  14-field record shape follows the
@@ -188,37 +192,26 @@ def alias_rows() -> list[tuple[str, str, str, int]]:
 
 
 def kb_pages_df(spark):
-    from pyspark.sql import types as T
-    schema = T.StructType([
-        T.StructField("title", T.StringType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("title_other", T.StringType()),
-        T.StructField("abstract", T.StringType()),
-        T.StructField("wikidata_id", T.StringType()),
-        T.StructField("categories", T.ArrayType(T.StringType())),
-        T.StructField("internal_links", T.ArrayType(T.StringType())),
-        T.StructField("infobox_type", T.StringType()),
-        T.StructField("geo_lat", T.DoubleType()),
-        T.StructField("geo_lon", T.DoubleType()),
-        T.StructField("thumbnail_url", T.StringType()),
-        T.StructField("instance_of", T.ArrayType(T.StringType())),
-        T.StructField("subclass_of", T.ArrayType(T.StringType())),
-        T.StructField("part_of", T.ArrayType(T.StringType())),
-        T.StructField("has_part", T.ArrayType(T.StringType())),
-    ])
-    return spark.createDataFrame([tuple(p[k] for k in _K) for p in KB_PAGES], schema)
+    return local_table(spark, [tuple(p[k] for k in _K) for p in KB_PAGES],
+                       "title string, lang string, title_other string, "
+                       "abstract string, wikidata_id string, "
+                       "categories array<string>, internal_links array<string>, "
+                       "infobox_type string, geo_lat double, geo_lon double, "
+                       "thumbnail_url string, instance_of array<string>, "
+                       "subclass_of array<string>, part_of array<string>, "
+                       "has_part array<string>")
 
 
 def redirects_df(spark):
-    return spark.createDataFrame(KB_REDIRECTS, "from_title string, to_title string, lang string")
+    return local_table(spark, KB_REDIRECTS, "from_title string, to_title string, lang string")
 
 
 def gazetteer_df(spark):
-    return spark.createDataFrame(GAZETTEER, "surface string, label string, type string")
+    return local_table(spark, GAZETTEER, "surface string, label string, type string")
 
 
 def aliases_df(spark):
-    return spark.createDataFrame(alias_rows(), "alias string, title string, lang string, alias_prio int")
+    return local_table(spark, alias_rows(), "alias string, title string, lang string, alias_prio int")
 
 
 # ---------------------------------------------------------------------------
@@ -388,28 +381,14 @@ def raw_page_rows() -> list[dict]:
 
 
 def raw_pages_df(spark):
-    from pyspark.sql import types as T
-    schema = T.StructType([
-        T.StructField("page_id", T.LongType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("title", T.StringType()),
-        T.StructField("extract", T.StringType()),
-        T.StructField("wikibase_item", T.StringType()),
-        T.StructField("categories_raw", T.ArrayType(T.StringType())),
-        T.StructField("links_raw", T.ArrayType(T.StringType())),
-        T.StructField("coord_lat", T.DoubleType()),
-        T.StructField("coord_lon", T.DoubleType()),
-        T.StructField("thumbnail_source", T.StringType()),
-        T.StructField("infobox", T.StringType()),
-        T.StructField("langlink_lang", T.StringType()),
-        T.StructField("langlink_title", T.StringType()),
-        T.StructField("instance_of", T.ArrayType(T.StringType())),
-        T.StructField("subclass_of", T.ArrayType(T.StringType())),
-        T.StructField("part_of", T.ArrayType(T.StringType())),
-        T.StructField("has_part", T.ArrayType(T.StringType())),
-    ])
-    return spark.createDataFrame(
-        [tuple(r[k] for k in _RAW_K) for r in raw_page_rows()], schema)
+    return local_table(spark, [tuple(r[k] for k in _RAW_K) for r in raw_page_rows()],
+                       "page_id bigint, lang string, title string, extract string, "
+                       "wikibase_item string, categories_raw array<string>, "
+                       "links_raw array<string>, coord_lat double, coord_lon double, "
+                       "thumbnail_source string, infobox string, langlink_lang string, "
+                       "langlink_title string, instance_of array<string>, "
+                       "subclass_of array<string>, part_of array<string>, "
+                       "has_part array<string>")
 
 
 def raw_pages_cte() -> str:

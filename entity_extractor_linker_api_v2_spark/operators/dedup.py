@@ -101,11 +101,11 @@ def _shingles_sql(text_col: str) -> str:
     Out-of-range zip_with padding (null) is dropped by the final slice;
     concat_ws skips nulls so padded entries never corrupt kept shingles.
 
-    SQL text (round 8): the lambda-built Column tree issued ~100 py4j
+    SQL text (round 8): a lambda-built Column tree issues ~100 py4j
     round trips per use — per-call plan-build time inside the bench timer
-    (guide §1.2); the string parses to the identical tree in one.  The
-    repeated split()/size() occurrences mirror the Column version exactly
-    (a reused Column object is also inlined per use site)."""
+    (guide §1.2); the string parses in one.  The split()/size()
+    subexpressions repeat per use site, as a reused Column object would be
+    inlined."""
     w = f"split({text_col}, ' ')"
     n = f"size({w})"
     p2 = (f"zip_with({w}, slice({w}, 2, greatest({n} - 1, 0)), "
@@ -113,11 +113,6 @@ def _shingles_sql(text_col: str) -> str:
     p3 = (f"zip_with({p2}, slice({w}, 3, greatest({n} - 2, 0)), "
           "(a, b) -> concat_ws(' ', a, b))")
     return f"slice({p3}, 1, greatest({n} - {SHINGLE_W - 1}, 0))"
-
-
-def _shingles(text_col: str):
-    """Column form of ``_shingles_sql`` (one F.expr parse)."""
-    return F.expr(_shingles_sql(text_col))
 
 
 # universal-hash family for minhash: h_i(s) = (A_i·base(s) + B_i) mod P with

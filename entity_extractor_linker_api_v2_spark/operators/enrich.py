@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_table
+
 
 def closest_level_match(df: DataFrame, provided_col: str, levels: list[str],
                         id_col: str = "doc_id") -> DataFrame:
@@ -63,7 +65,7 @@ def synonym_dim(spark, synonyms: dict[str, list[str]] | None = None,
     d = synonyms if synonyms is not None else SIMPLE_SYNONYMS
     rows = [(w, i + 1, s)
             for w, syns in d.items() for i, s in enumerate(syns[:max_synonyms])]
-    return spark.createDataFrame(rows, "word string, syn_idx int, synonym string")
+    return local_table(spark, rows, "word string, syn_idx int, synonym string")
 
 
 def synonym_expand(df: DataFrame, word_col: str,

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from .. import fixtures
 from ..fixtures import aliases_df, kb_pages_df, redirects_df
+from ..session import local_table
 
 
 def _variations_sql(x: str = "label") -> str:
@@ -295,6 +296,10 @@ def resolve_label_universe(spark, labels: list[str],
     keys) instead.  Output: one row per (label, link_lang) that resolves,
     with hit_lang + page columns (same shape as ``pick_best``).
 
+    The key frame, like the fixture dimensions it is resolved against by
+    default, is a ``LocalRelation`` built by ``session.local_table``: the
+    resolution's jobs read driver-side literals, not Python-parallelized
+    RDD rows, and a warm call takes less than half as long.
     The resolution runs once, at call time, into an eager
     ``localCheckpoint``: every consumer of the returned frame (each output
     action of a pipeline, each micro-batch of a stream joining it) reads
@@ -304,8 +309,8 @@ def resolve_label_universe(spark, labels: list[str],
     A local checkpoint, not a ``persist``: the CacheManager matches a
     persist by plan, so a second call would silently reuse the first
     call's rows."""
-    keys = spark.createDataFrame(
-        [(lbl, lang) for lbl in sorted(set(labels)) for lang in ("de", "en")],
+    keys = local_table(
+        spark, [(lbl, lang) for lbl in sorted(set(labels)) for lang in ("de", "en")],
         "label string, link_lang string")
     return resolve_keys(spark, keys, redirects, aliases, kb).localCheckpoint()
 

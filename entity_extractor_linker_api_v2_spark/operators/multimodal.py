@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_table
+
 MEDIA_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType()),
     T.StructField("kind", T.StringType()),        # image | audio | video
@@ -44,7 +46,7 @@ def synth_media(spark, n: int = 256) -> DataFrame:
         payload = _MAGIC + struct.pack("<iii", w, h, fr) + bytes([i % 251]) * 64
         kind = ("image", "audio", "video")[i % 3]
         rows.append((i, kind, bytearray(payload), (w, h, fr, f"syn{i % 3}")))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_table(spark, rows, MEDIA_SCHEMA)
 
 
 def _decode_header(payload: bytes) -> tuple[int, int, int]:

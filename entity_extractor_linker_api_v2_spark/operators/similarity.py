@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_table
+
 DIM = 64
 N_PLANES = 4
 # auto-derivation target: bits ≈ log2(n / TARGET_BUCKET).  48 (not 32) so the
@@ -70,25 +72,14 @@ def extended_plane(k: int, salt: int = 0, dim: int = DIM) -> list[float]:
     return [((i * m + k * 40503 + salt) % 1009 - 504) / 504.0 for i in range(dim)]
 
 
-def _dot(vec_col, const: list[float]):
-    c = F.array(*[F.lit(float(x)) for x in const])
-    return F.aggregate(F.zip_with(vec_col, c, lambda a, b: a.cast("double") * b),
-                       F.lit(0.0), lambda acc, x: acc + x)
-
-
-def _norm(vec_col):
-    return F.sqrt(F.aggregate(vec_col, F.lit(0.0),
-                              lambda acc, x: acc + x.cast("double") * x.cast("double")))
-
-
-# SQL-string twins of _dot/_norm for NAMED columns (round 8): building the
-# 64-literal array + two lambda trees through the Python Column API costs
-# ~70 py4j round-trips per call (measured ~0.7 s of pure plan-build time in
-# q50, paid inside the bench timer); one F.expr parse builds the identical
-# expression tree JVM-side.  `{x!r}D` literals round-trip doubles exactly
-# (repr is shortest-exact, the D suffix forces DoubleType — a bare decimal
-# would parse as DECIMAL), and the fold order matches _dot's left fold, so
-# results are bit-identical (oracle-hash-checked via q28/q29/q30/q50).
+# Dot product with a constant vector and L2 norm of NAMED array columns, as
+# SQL text: one F.expr parse builds the expression tree JVM-side, where the
+# Python Column API would take ~70 py4j round trips per call for the
+# 64-literal array and two lambda trees (measured ~0.7 s of plan-build time
+# in q50).  `{x!r}D` literals round-trip doubles exactly (repr is
+# shortest-exact, the D suffix forces DoubleType — a bare decimal would
+# parse as DECIMAL), and the product is a left fold from 0.0D over the
+# elements in order (oracle-hash-checked via q28/q29/q30/q50).
 
 
 def _dot_sql_str(col: str, const: list[float]) -> str:
@@ -301,8 +292,8 @@ def ivf_topk(df: DataFrame, k: int = 10, id_col: str = "vec_id",
         # the probe list is ranked ON THE DRIVER from the ≤K centroids that
         # are already collected for the argmin literals (round 8) — the
         # Python left fold `acc += cv[i]*q[i]` is the identical IEEE-double
-        # sequence to _dot's aggregate, and the (−dot, centroid_id) sort
-        # matches the old orderBy(desc _qd, centroid_id) tie-break, so the
+        # sequence to _dot_sql_str's aggregate, and the (−dot, centroid_id)
+        # sort matches the old orderBy(desc _qd, centroid_id) tie-break, so the
         # probed set is bit-identical while the plan loses the ranking
         # subquery AND the broadcast join: Scan → Project → Filter →
         # TakeOrderedAndProject, zero Join (the shape ivf_topk_indexed
@@ -402,9 +393,9 @@ def ivf_topk_indexed(spark, table: str, k: int = 10, id_col: str = "vec_id",
     parent session (cross-session plans fail).  Pass ``rebind=True`` to get
     a frame in the CALLER's session instead: the top-k result is ≤k rows,
     so it is collected eagerly (the pruned probe still executes on the
-    child session) and recreated via createDataFrame — joinable with any
-    parent-session frame, at the cost of eager execution and a plan that no
-    longer shows the pruned scan."""
+    child session) and recreated via ``session.local_table`` — joinable
+    with any parent-session frame, at the cost of eager execution and a
+    plan that no longer shows the pruned scan."""
     import math
     q = query_vector()
     qn = math.sqrt(sum(x * x for x in q))
@@ -434,7 +425,7 @@ def ivf_topk_indexed(spark, table: str, k: int = 10, id_col: str = "vec_id",
            .orderBy(F.desc("_s"), id_col).limit(k)
            .select(id_col, F.round("_s", 3).alias("cosine")))
     if rebind:
-        return spark.createDataFrame(out.collect(), schema=out.schema)
+        return local_table(spark, out.collect(), out.schema)
     return out
 
 

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from ..operators import linking, mentions as M, stats as S, triples as TR
 from ..plans.pipeline import extract_stage, mention_stage
+from ..session import local_table
 from ..sources import tables
 
 
@@ -527,8 +528,8 @@ def q_qa_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..refsem import DEFAULT_LEVELS
     d = tables.load(spark, sf_dir, "documents").select(
         "doc_id", (F.lit(1) + F.col("doc_id") % 12).alias("n_pairs"))
-    levels = spark.createDataFrame(
-        [(i, lvl) for i, lvl in enumerate(DEFAULT_LEVELS)], "level_idx int, level string")
+    levels = local_table(
+        spark, list(enumerate(DEFAULT_LEVELS)), "level_idx int, level string")
     k = len(DEFAULT_LEVELS)
     return (d.crossJoin(F.broadcast(levels))
             .select("doc_id", "level",

@@ -11,7 +11,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def get_spark(app_name: str = "eel-v2-spark", master: str | None = None,
@@ -44,3 +45,25 @@ def get_spark(app_name: str = "eel-v2-spark", master: str | None = None,
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_table(spark: SparkSession, rows, schema: T.StructType | str) -> DataFrame:
+    """A driver-side literal table (a fixture dimension, a small lookup
+    list, a collected result) as a ``LocalRelation``.
+
+    The rows cross to the JVM once, as Arrow record batches, are scanned
+    in the driver, and carry a size estimate.  ``createDataFrame(<list>)``
+    plans a ``LogicalRDD`` over parallelized pickled rows instead, so every
+    job that scans it runs tasks that unpickle them again.  ``rows`` are
+    tuples in the field order of ``schema`` (a ``StructType`` or a DDL
+    string)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema)
+    return spark.createDataFrame(table, schema)

@@ -253,3 +253,42 @@ def test_pipeline_materializes_each_layer_once_per_call(spark):
     assert linking.link_mentions(spark, ments).count() == \
         composable["entities"].count()
     assert cache_empty()
+
+
+def test_pipeline_job_counts(spark, tmp_path):
+    """The Spark jobs of one fused pipeline_from_docs call on SF_SMALL in
+    the test session (local[8], 8 shuffle partitions), pinned: 8 for the
+    call, and 13 for writing its three sinks and collecting its four
+    stats, of which types_distribution takes 2 — its per-type aggregate is
+    sorted in one partition, so no range exchange samples it.  A change
+    that adds or removes a pass shows up here."""
+    from entity_extractor_linker_api_v2_spark.operators import stats as S
+    from entity_extractor_linker_api_v2_spark.plans.pipeline import (
+        pipeline_from_docs)
+    from entity_extractor_linker_api_v2_spark.sources import tables
+
+    sc = spark.sparkContext
+    docs = tables.docs_table(spark, SF_SMALL)
+
+    def jobs(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            result = action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    out, call_jobs = jobs("job-count-call",
+                          lambda: pipeline_from_docs(spark, docs, fused=True))
+
+    def outputs():
+        for name in ("entities", "triples", "nodes"):
+            out[name].write.mode("overwrite").parquet(str(tmp_path / name))
+        for name in ("types_distribution", "top10_categories",
+                     "linked_stats", "extraction_stats"):
+            out[name].collect()
+
+    _, output_jobs = jobs("job-count-outputs", outputs)
+    _, types_jobs = jobs("job-count-types",
+                         lambda: S.types_distribution(out["entities"]).collect())
+    assert (call_jobs, output_jobs, types_jobs) == (8, 13, 2)

@@ -50,6 +50,45 @@ def test_linking_joins_are_broadcast(spark):
         assert "SortMergeJoin" not in plan
 
 
+
+def test_literal_tables_are_local_relations(spark, monkeypatch):
+    """The fixture dimensions and resolve_label_universe's key frame are
+    driver-side literal tables planned as LocalRelations (one Arrow batch,
+    a finite size estimate), not LogicalRDDs over Python-parallelized rows,
+    and keep the schemas they had as createDataFrame(<list>) frames."""
+    from entity_extractor_linker_api_v2_spark import fixtures
+    from entity_extractor_linker_api_v2_spark.operators import linking
+    seen = {}
+    resolve_keys = linking.resolve_keys
+
+    def spy(spark_, keys, *args, **kwargs):
+        seen["keys"] = keys
+        return resolve_keys(spark_, keys, *args, **kwargs)
+
+    monkeypatch.setattr(linking, "resolve_keys", spy)
+    assert linking.resolve_label_universe(spark, ["Berlin"]).count() == 2
+    frames = {
+        "kb_pages_df": (fixtures.kb_pages_df(spark),
+                        "struct<title:string,lang:string,title_other:string,"
+                        "abstract:string,wikidata_id:string,"
+                        "categories:array<string>,internal_links:array<string>,"
+                        "infobox_type:string,geo_lat:double,geo_lon:double,"
+                        "thumbnail_url:string,instance_of:array<string>,"
+                        "subclass_of:array<string>,part_of:array<string>,"
+                        "has_part:array<string>>"),
+        "aliases_df": (fixtures.aliases_df(spark),
+                       "struct<alias:string,title:string,lang:string,alias_prio:int>"),
+        "redirects_df": (fixtures.redirects_df(spark),
+                         "struct<from_title:string,to_title:string,lang:string>"),
+        "gazetteer_df": (fixtures.gazetteer_df(spark),
+                         "struct<surface:string,label:string,type:string>"),
+        "label universe keys": (seen["keys"],
+                                "struct<label:string,link_lang:string>"),
+    }
+    for name, (df, schema) in frames.items():
+        assert df._jdf.queryExecution().analyzed().nodeName() == "LocalRelation", name
+        assert df.schema.simpleString() == schema, name
+
 def test_fused_pipeline_corpus_side_has_no_shuffle(spark):
     """The fused throughput path is map-only on the CORPUS side: any shuffle
     Exchange must live inside the broadcast (dimension) subtree — i.e. appear
