@@ -923,8 +923,8 @@ a2 AS (SELECT vec_id, cluster FROM (
 SELECT vec_id, cluster FROM a2"""
 
 # Connected components via transitive closure (recursive CTE): an
-# independent check of the small-star/large-star loop in
-# operators.canonicalize.
+# independent check of operators.canonicalize — q19's anchor contraction
+# (star CC over bridge nodes only) and q45's small-star/large-star merge.
 _CC_FINAL = """
 SELECT n AS node, min(m) AS comp, sha256(min(m)) AS canonical_id
 FROM reach GROUP BY n"""

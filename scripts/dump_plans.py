@@ -265,6 +265,20 @@ def main() -> None:
     finally:
         shutil.rmtree(tmp2, ignore_errors=True)
 
+    from entity_extractor_linker_api_v2_spark.operators.canonicalize import (
+        anchor_pairs, node_anchors)
+    sections.append(
+        "## Canonical entities (q19): anchor contraction\n\n"
+        "Check: one Generate (explode of each row's {label, label_de,\n"
+        "anchor} nodes), then three Exchanges and no join or loop: the\n"
+        "distinct's on (anchor, node), the group-minimum Window's on\n"
+        "anchor, the per-node aggregate's (bridge flag, min gm) on node.\n"
+        "canonical_entities materializes the pairs and this aggregate\n"
+        "(localCheckpoint); star CC runs only when some node is a bridge\n"
+        "(none at SF_SMALL).\n\n"
+        "```\n" + plan_of(node_anchors(anchor_pairs(
+            QUERIES["q11_entities"](spark, SF)))) + "```\n")
+
     sections.append(
         "## Closest-level enrich (q13, round-4 shape)\n\n"
         "Check: single Project — the levels list is a literal array of\n"

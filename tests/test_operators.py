@@ -283,12 +283,33 @@ def test_ivf_topk_with_prebuilt_index_matches_inline(spark):
     assert inline == reused and len(inline) == 10
 
 
+def _bfs_partition(edges):
+    """{(node, min member of its component)} by BFS over undirected edges."""
+    from collections import defaultdict
+
+    adj = defaultdict(set)
+    for a, b in edges:
+        if a != b:
+            adj[a].add(b)
+            adj[b].add(a)
+    want, seen = set(), set()
+    for start in adj:
+        if start in seen:
+            continue
+        comp, frontier = {start}, {start}
+        while frontier:
+            frontier = {v for u in frontier for v in adj[u]} - comp
+            comp |= frontier
+        seen |= comp
+        want |= {(n, min(comp)) for n in comp}
+    return want
+
+
 def test_star_cc_equals_bfs_partition(spark):
     """small-star/large-star components must produce the (node, comp=min
     member) partition of a pure-Python BFS on chains, hubs, forests, and
     random graphs."""
     import random
-    from collections import defaultdict
 
     from entity_extractor_linker_api_v2_spark.operators.canonicalize import (
         connected_components_star)
@@ -301,23 +322,84 @@ def test_star_cc_equals_bfs_partition(spark):
     edges = [(a, b) for a, b in chain + hub + rand if a != b]
     df = spark.createDataFrame(edges, "a string, b string")
 
-    adj = defaultdict(set)
-    for a, b in edges:
-        adj[a].add(b)
-        adj[b].add(a)
-    want, seen = set(), set()
-    for start in adj:
-        if start in seen:
-            continue
-        comp, frontier = {start}, [start]
-        while frontier:
-            frontier = {v for u in frontier for v in adj[u]} - comp
-            comp |= frontier
-        seen |= comp
-        want |= {(n, min(comp)) for n in comp}
-
     star = {(r["node"], r["comp"]) for r in connected_components_star(df).collect()}
-    assert star == want and len(star) > 0
+    assert star == _bfs_partition(edges) and len(star) > 0
+
+
+def test_star_cc_raises_past_round_bound(spark, monkeypatch):
+    """A graph still changing after STAR_MAX_ROUNDS rounds raises instead of
+    returning a partial partition; any edge needs a second round to confirm
+    its fixpoint, so a bound of one round cannot be met."""
+    from entity_extractor_linker_api_v2_spark.operators import canonicalize
+
+    edges = spark.createDataFrame([("a", "b"), ("b", "c")], "a string, b string")
+    monkeypatch.setattr(canonicalize, "STAR_MAX_ROUNDS", 1)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        canonicalize.connected_components_star(edges)
+
+
+def _entity_rows(rng, bridges):
+    """Seeded entity rows (label, label_de, wikidata_id): 30 disjoint pages,
+    two in three under a QID, each with 1-3 mention labels, plus edgeless
+    rows (label = label_de, no QID).  Each name's first letter is drawn, so
+    a page's minimum member is its QID, its label_de or one of its labels.
+    `bridges` joins pages through shared nodes: "label" makes labels
+    resolve to two pages; "label_de" puts a label_de under a second QID and
+    adds QID-less rows on QID pages' label_de."""
+    def name(k, role):
+        return f"{rng.choice('AQbz')}{k:02d}{role}"
+
+    pages = [(name(k, "d"), name(k, "q") if k % 3 else "",
+              [name(k, f"l{j}") for j in range(rng.randrange(1, 4))])
+             for k in range(30)]
+    rows = [(lbl, de, qid) for de, qid, labels in pages for lbl in labels]
+    rows += [(de, de, qid) for de, qid, _ in pages[::4]]
+    rows += [(name(k, "x"),) * 2 + ("",) for k in range(5)]
+    for k in range(8):
+        (de1, qid1, labels1), (de2, qid2, _) = rng.sample(pages, 2)
+        if bridges == "label":
+            rows.append((labels1[0], de2, qid2))
+        elif bridges == "label_de" and qid1:
+            rows.append((name(k, "m"), de1, qid2 or name(k, "r")))
+            rows.append((name(k, "n"), de1, ""))
+    rng.shuffle(rows)
+    return rows
+
+
+@pytest.mark.parametrize("bridges", [None, "label", "label_de"])
+def test_canonical_entities_equals_bfs_partition(spark, bridges):
+    """canonical_entities' anchor contraction must give the BFS partition of
+    the entity_edges graph, with comp <= node and canonical_id =
+    sha256(comp), both without bridges (two aggregations, no CC) and with
+    them (star CC over the bridge nodes)."""
+    import hashlib
+    import random
+
+    from entity_extractor_linker_api_v2_spark.operators.canonicalize import (
+        canonical_entities, entity_edges)
+
+    for seed in (1, 2):
+        rows = _entity_rows(random.Random(seed), bridges)
+        # a bridge is a node under two anchors (QID, else label_de): check
+        # the generator really exercises the branch it is meant for
+        anchors = {}
+        for lbl, de, qid in rows:
+            anchor = qid or de
+            for n in {lbl, de, anchor} if len({lbl, de, anchor}) > 1 else ():
+                anchors.setdefault(n, set()).add(anchor)
+        has_bridge = any(len(a) > 1 for a in anchors.values())
+        assert has_bridge == (bridges is not None), seed
+
+        df = spark.createDataFrame(
+            rows, "label string, label_de string, wikidata_id string")
+        want = _bfs_partition(tuple(r) for r in entity_edges(df).collect())
+        got = canonical_entities(df).collect()
+        assert {(r["node"], r["comp"]) for r in got} == want, seed
+        assert len(got) == len(want)
+        assert all(r["comp"] <= r["node"] for r in got)
+        assert all(r["canonical_id"]
+                   == hashlib.sha256(r["comp"].encode()).hexdigest()
+                   for r in got)
 
 
 def test_ivf_recall_monotonic_in_nprobe(spark):

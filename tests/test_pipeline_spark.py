@@ -292,3 +292,30 @@ def test_pipeline_job_counts(spark, tmp_path):
     _, types_jobs = jobs("job-count-types",
                          lambda: S.types_distribution(out["entities"]).collect())
     assert (call_jobs, output_jobs, types_jobs) == (8, 13, 2)
+
+
+def test_canonical_entities_job_count(spark):
+    """The Spark jobs of one canonical_entities call plus its collect on the
+    SF_SMALL entities (no bridge node there), pinned at 6: the pairs
+    checkpoint takes 3 (the distinct's and the anchor window's exchanges,
+    then the write), the per-node aggregate 2 (its bridge count is observed
+    on that job), the collect 1.  The star-CC rounds this replaced took
+    24."""
+    from entity_extractor_linker_api_v2_spark.operators.canonicalize import (
+        canonical_entities)
+    from entity_extractor_linker_api_v2_spark.plans.pipeline import (
+        pipeline_from_docs)
+    from entity_extractor_linker_api_v2_spark.sources import tables
+
+    sc = spark.sparkContext
+    entities = pipeline_from_docs(
+        spark, tables.docs_table(spark, SF_SMALL), fused=True)["entities"]
+    entities.count()
+    group = "job-count-canonical"
+    sc.setJobGroup(group, group)
+    try:
+        rows = canonical_entities(entities).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rows
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 6
