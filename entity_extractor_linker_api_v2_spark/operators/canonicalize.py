@@ -11,14 +11,16 @@ real-world entity; the canonical id is the lexicographic minimum member
 iterating over it: every entity row is a star around its anchor (its QID,
 else its ``label_de``), so one aggregation per anchor and one per node
 resolve every component in a fixed number of Spark jobs.  Only bridge
-nodes — a node under two anchors — need iteration; they and their anchors
-go through ``connected_components_star``, alternating small-star /
+nodes — a node under two anchors — need iteration: the groups they join,
+each contracted to its minimum node, go through
+``connected_components_star``, alternating small-star /
 large-star (Kiveris et al.): hub-safe at 10^12 edges — neighbor sets never
 materialize on one row (join-based, no collect_list) and rounds strictly
 shrink the edge relation toward the component stars.  It is a driver-side
 loop with ``localCheckpoint()`` per round to cut lineage (SURVEY §4.2 — no
-Catalyst analog, no GraphFrames dependency), and it is also the CC of the
-incremental ``merge_components*`` folds.
+Catalyst analog, no GraphFrames dependency) whose convergence signature is
+observed on that same job, and it is also the CC of the incremental
+``merge_components*`` folds.
 """
 
 from __future__ import annotations
@@ -58,16 +60,32 @@ def connected_components_star(edges: DataFrame) -> DataFrame:
     propagation needs O(diameter).  Node ids are strings; lexicographic
     order plays the role of the integer order in the paper.
 
-    Rounds run to the fixpoint; a graph that has not converged after
-    ``STAR_MAX_ROUNDS`` rounds raises ``RuntimeError`` rather than return a
-    partial partition.
+    Rounds run to the fixpoint — a round that leaves the edge relation's
+    signature unchanged, so an input that already is a star forest
+    (member → smaller root) stops after one round; a graph that has not
+    converged after ``STAR_MAX_ROUNDS`` rounds raises ``RuntimeError``
+    rather than return a partial partition.
 
     Returns (node, comp) with comp = the component's minimum member
     (pytest-asserted against a BFS partition on chain / hub / random
     graphs).
     """
-    e0 = (edges.select("a", "b").filter(F.col("a") != F.col("b"))
-          .distinct().localCheckpoint())
+    def checkpoint(ed: DataFrame):
+        # convergence check: the edge relation is a fixpoint when a round
+        # leaves its (count, checksum) signature unchanged; the signature is
+        # observed on the job that materializes the relation, not collected
+        # by a job of its own
+        obs = Observation()
+        ed = (ed.observe(obs, F.count("*").alias("n"),
+                         F.expr("bit_xor(xxhash64(a, b)) AS x"))
+              .localCheckpoint())
+        sig = obs.get
+        return ed, (sig["n"], sig["x"])
+
+    # with the input's own signature, a star-forest input stops after one
+    # round
+    e0, prev_sig = checkpoint(edges.select("a", "b")
+                              .filter(F.col("a") != F.col("b")).distinct())
     e = e0
     # all_nodes is consumed ONCE, in the final left join — deriving it
     # lazily from the already-materialized e0 costs nothing per round,
@@ -101,13 +119,8 @@ def connected_components_star(edges: DataFrame) -> DataFrame:
                .unionByName(m.selectExpr("a", "m AS b")))
         return out.where("a != b").distinct()
 
-    prev_sig = None
     for _ in range(STAR_MAX_ROUNDS):
-        e = star(star(e, large=True), large=False).localCheckpoint()
-        # convergence check: the edge relation is a fixpoint when its
-        # (count, checksum) signature stops changing
-        sig = tuple(e.agg(F.count("*"),
-                          F.expr("bit_xor(xxhash64(a, b))")).collect()[0])
+        e, sig = checkpoint(star(star(e, large=True), large=False))
         if sig == prev_sig:
             break
         prev_sig = sig
@@ -243,10 +256,12 @@ def canonical_entities(entities: DataFrame) -> DataFrame:
 
       * no bridge: the groups are the components, comp = gm of the node's
         one anchor — two aggregations, done;
-      * bridges: star CC over (bridge, anchor) and (anchor, gm(anchor))
-        for the anchors that hold a bridge merges exactly the groups that
-        share nodes; each node's comp is the minimum over its anchors of
-        that CC's comp, or gm for an anchor outside the CC.
+      * bridges: each group is contracted to its gm, and a bridge links
+        the gm of every one of its anchors to its own min gm.  Star CC over
+        those gm-level edges merges exactly the groups that share nodes,
+        and its comp is the least gm, i.e. the least node, of the merged
+        groups; a node's comp is the CC comp of its own min gm, or that
+        min gm when no bridge reaches its group.
 
     Which branch runs is decided by the data — the bridge count is observed
     on the job that materializes the per-node aggregate — not by a flag.
@@ -261,14 +276,12 @@ def canonical_entities(entities: DataFrame) -> DataFrame:
     if has_bridges.get["n"] == 0:
         comps = per_node
     else:
-        # one inline generator, not a union of two projections: on the
-        # union, Spark 4.1's union constraint rewrite fails (key not found)
-        # inside the CC rounds
+        # gm-level edges: a bridge links the gm of each of its anchors to
+        # its own comp (the least of them)
         cc = connected_components_star(
-            pairs.join(per_node.where("bridge"), "node", "left_semi")
-            .selectExpr("inline(array(struct(node AS a, anchor AS b), "
-                        "struct(anchor AS a, gm AS b)))"))
-        comps = (pairs.join(cc.selectExpr("node AS anchor", "comp AS cc"),
-                            "anchor", "left")
-                 .groupBy("node").agg(F.expr("min(coalesce(cc, gm)) AS comp")))
+            pairs.join(per_node.where("bridge"), "node")
+            .selectExpr("gm AS a", "comp AS b"))
+        comps = (per_node.join(cc.selectExpr("node AS comp", "comp AS cc"),
+                               "comp", "left")
+                 .selectExpr("node", "coalesce(cc, comp) AS comp"))
     return comps.selectExpr("node", "comp", "sha2(comp, 256) AS canonical_id")

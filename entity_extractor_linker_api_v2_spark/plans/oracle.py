@@ -924,7 +924,8 @@ SELECT vec_id, cluster FROM a2"""
 
 # Connected components via transitive closure (recursive CTE): an
 # independent check of operators.canonicalize — q19's anchor contraction
-# (star CC over bridge nodes only) and q45's small-star/large-star merge.
+# (star CC only over the groups bridge nodes join) and q45's
+# small-star/large-star merge.
 _CC_FINAL = """
 SELECT n AS node, min(m) AS comp, sha256(min(m)) AS canonical_id
 FROM reach GROUP BY n"""

@@ -351,8 +351,8 @@ def q_extraction_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M4 connected components (anchor contraction, star CC over bridge nodes
-    only; oracle = recursive CTE transitive closure)."""
+    """M4 connected components (anchor contraction, star CC only over the
+    groups bridge nodes join; oracle = recursive CTE transitive closure)."""
     from ..operators.canonicalize import canonical_entities
     return canonical_entities(_entities(spark, sf_dir))
 

@@ -328,8 +328,8 @@ def test_star_cc_equals_bfs_partition(spark):
 
 def test_star_cc_raises_past_round_bound(spark, monkeypatch):
     """A graph still changing after STAR_MAX_ROUNDS rounds raises instead of
-    returning a partial partition; any edge needs a second round to confirm
-    its fixpoint, so a bound of one round cannot be met."""
+    returning a partial partition; a chain is no star forest, so its first
+    round changes its edges and a bound of one round cannot be met."""
     from entity_extractor_linker_api_v2_spark.operators import canonicalize
 
     edges = spark.createDataFrame([("a", "b"), ("b", "c")], "a string, b string")

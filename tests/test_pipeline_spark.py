@@ -294,6 +294,21 @@ def test_pipeline_job_counts(spark, tmp_path):
     assert (call_jobs, output_jobs, types_jobs) == (8, 13, 2)
 
 
+def _canonical_entities_jobs(spark, entities, group):
+    """The Spark jobs of one canonical_entities call plus its collect."""
+    from entity_extractor_linker_api_v2_spark.operators.canonicalize import (
+        canonical_entities)
+
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        rows = canonical_entities(entities).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rows
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_canonical_entities_job_count(spark):
     """The Spark jobs of one canonical_entities call plus its collect on the
     SF_SMALL entities (no bridge node there), pinned at 6: the pairs
@@ -301,21 +316,30 @@ def test_canonical_entities_job_count(spark):
     then the write), the per-node aggregate 2 (its bridge count is observed
     on that job), the collect 1.  The star-CC rounds this replaced took
     24."""
-    from entity_extractor_linker_api_v2_spark.operators.canonicalize import (
-        canonical_entities)
     from entity_extractor_linker_api_v2_spark.plans.pipeline import (
         pipeline_from_docs)
     from entity_extractor_linker_api_v2_spark.sources import tables
 
-    sc = spark.sparkContext
     entities = pipeline_from_docs(
         spark, tables.docs_table(spark, SF_SMALL), fused=True)["entities"]
     entities.count()
-    group = "job-count-canonical"
-    sc.setJobGroup(group, group)
-    try:
-        rows = canonical_entities(entities).collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert rows
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 6
+    assert _canonical_entities_jobs(spark, entities,
+                                    "job-count-canonical") == 6
+
+
+@pytest.mark.parametrize("bridges,want", [("label", 22), ("label_de", 36)])
+def test_canonical_entities_bridge_job_count(spark, bridges, want):
+    """The same count on seeded entity graphs WITH bridge nodes, where star
+    CC runs over the anchor groups' minimum nodes: 22 when a label resolves
+    to two pages (the contracted edges already form stars, so one round
+    confirms them), 36 with label_de bridges (three rounds).  CC over the
+    whole entity_edges graph took 42 and 51 jobs on the same rows."""
+    import random
+
+    from test_operators import _entity_rows
+
+    entities = spark.createDataFrame(
+        _entity_rows(random.Random(1), bridges),
+        "label string, label_de string, wikidata_id string").localCheckpoint()
+    assert _canonical_entities_jobs(
+        spark, entities, f"job-count-canonical-{bridges}") == want
