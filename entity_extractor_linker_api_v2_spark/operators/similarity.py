@@ -116,11 +116,17 @@ def _matrix_sql(cents: list[tuple[int, list[float]]]) -> tuple[str, str]:
 
 def _argmin_sql(vec_col: str, cents: list[tuple[int, list[float]]],
                 measure_sql) -> str:
-    """SQL text of the per-row argmin struct over literal centroids — the
-    string twin of ``_argmin_centroid`` (same zip_with over ONE nested
-    matrix literal, same (measure, centroid_id) struct order, same
-    array_min tie-break).  ``measure_sql(vec, cvec)`` returns the measure
-    expression text (ascending-better)."""
+    """SQL text of the per-row argmin struct over literal centroids:
+    array_min over (measure, centroid_id) structs — a single Project, zero
+    Exchange; ties go to the smallest centroid_id.  ``measure_sql(vec,
+    cvec)`` returns the measure expression text (ascending-better; negate
+    a dot for argmax).
+
+    The centroid matrix is ONE nested array literal traversed with
+    zip_with, not K unrolled per-centroid expressions: the generated code
+    is O(1) in K×dim (an unrolled 16×64-literal tree cost seconds of
+    Janino compilation per query — fixed overhead that dwarfed the actual
+    scan at bench scale)."""
     cmat, cids = _matrix_sql(cents)
     return ("array_min(zip_with(" + cmat + ", " + cids + ", (cv, cid) -> "
             "named_struct('m', " + measure_sql(vec_col, "cv") + ", "
@@ -128,8 +134,11 @@ def _argmin_sql(vec_col: str, cents: list[tuple[int, list[float]]],
 
 
 def _neg_dot_sql(vec: str, cvec: str) -> str:
-    """String twin of ``_neg_dot_lit`` (negated HOF dot; negation of a
-    double is exact)."""
+    """Negated HOF dot against a centroid row of the literal matrix — the
+    exact zip_with + sequential-aggregate arithmetic of the relational
+    formulation (the literal matrix holds the same doubles the float32
+    cvec cast to), negated so array_min takes the argmax.  Negation of a
+    double is exact."""
     return ("-aggregate(zip_with(" + vec + ", " + cvec + ", "
             "(a, b) -> cast(a as double) * b), 0.0D, (acc, x) -> acc + x)")
 
@@ -192,37 +201,6 @@ def _collect_centroids(c: DataFrame) -> list[tuple[int, list[float]]]:
                          "would silently assign NULL centroid_id to every row")
     return sorted(((r["centroid_id"], list(r["cvec"])) for r in rows),
                   key=lambda t: t[0])
-
-
-def _neg_dot_lit(vec, cvec):
-    """Negated HOF dot against a centroid-row column — the exact zip_with +
-    sequential-aggregate arithmetic of the relational formulation (the
-    literal matrix holds the same doubles the float32 cvec cast to),
-    negated so array_min takes the argmax.  Negation of a double is exact."""
-    return -F.aggregate(F.zip_with(vec, cvec, lambda a, b: a.cast("double") * b),
-                        F.lit(0.0), lambda acc, x: acc + x)
-
-
-def _argmin_centroid(vec_col: str, cents: list[tuple[int, list[float]]],
-                     measure) -> tuple:
-    """Per-row argmin over literal centroids: array_min over
-    (measure, centroid_id) structs — a single Project, zero Exchange.
-    `measure(vec, cvec)` must be ascending-better (negate a dot for argmax).
-    Returns (best_measure, best_centroid_id) columns.
-
-    The centroid matrix is ONE nested array literal traversed with
-    zip_with, not K unrolled per-centroid expressions: the generated code
-    is O(1) in K×dim (an unrolled 16×64-literal tree cost seconds of
-    Janino compilation per query — fixed overhead that dwarfed the actual
-    scan at bench scale)."""
-    cmat = F.lit([[float(x) for x in cv] for _, cv in cents])
-    cids = F.lit([cid for cid, _ in cents])
-    cands = F.zip_with(
-        cmat, cids,
-        lambda cv, cid: F.struct(measure(F.col(vec_col), cv).alias("m"),
-                                 cid.cast("long").alias("centroid_id")))
-    best = F.array_min(cands)
-    return best["m"], best["centroid_id"]
 
 
 def ivf_assign(df: DataFrame, id_col: str = "vec_id",

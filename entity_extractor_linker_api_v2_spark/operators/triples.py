@@ -6,11 +6,13 @@ predicates (linker.py:109-118).  The rebuild makes the edges table a
 first-class deterministic output: for each entity record emitted by the
 linking stage we produce
 
-    (url, subj, pred, obj) with pred ∈
+    (url, subj, pred, obj) with pred ∈, in this order per entity,
       instance_of   — always, obj = entity type
       same_as       — when wikidata_id present / when dbpedia_uri present
       has_category  — one per category (O-39 prefix-stripped at KB build)
       links_to      — one per internal link
+      part_of       — one per part_of entry
+      has_part      — one per has_part entry
       located_at    — when geo present, obj = "lat,lon"
 
 subj is the canonical German label (label_de, always non-empty after the
@@ -26,38 +28,14 @@ PREDICATES = ("instance_of", "same_as", "has_category", "links_to",
               "located_at", "part_of", "has_part")
 
 
-def triple_structs(entities: DataFrame):
-    """Per-entity array<struct<pred,obj>> Column of the emitted edges — the
-    shared construction behind ``emit_triples`` (which explodes it) and
-    stats.top10_all's `predicates` key (which rewraps it per entity, so the
-    8-key stats query reads the entity relation ONCE instead of unioning a
-    second triples subtree over the same cached scan)."""
-    def po(pred, obj):
-        return F.struct(F.lit(pred).alias("pred"), obj.alias("obj"))
-
-    empty = F.array().cast("array<struct<pred:string,obj:string>>")
-    return F.concat(
-        F.array(po("instance_of", F.col("type"))),
-        F.when(F.col("wikidata_id") != "",
-               F.array(po("same_as", F.col("wikidata_id")))).otherwise(empty),
-        F.when(F.col("dbpedia_uri") != "",
-               F.array(po("same_as", F.col("dbpedia_uri")))).otherwise(empty),
-        F.transform("categories", lambda c: po("has_category", c)),
-        F.transform("internal_links", lambda x: po("links_to", x)),
-        F.transform("part_of", lambda x: po("part_of", x)),
-        F.transform("has_part", lambda x: po("has_part", x)),
-        F.when(F.col("geo_lat").isNotNull() & F.col("geo_lon").isNotNull(),
-               F.array(po("located_at",
-                          F.concat(F.col("geo_lat").cast("string"), F.lit(","),
-                                   F.col("geo_lon").cast("string")))))
-         .otherwise(empty),
-    )
-
-
-# SQL-text twin of ``triple_structs`` (round 8): parses to the identical
-# expression tree in ONE py4j round trip — the lambda-built Column version
-# issued ~600 calls of pure plan-construction time per use inside the bench
-# timer (guide §1.2).  Equality is pytest-asserted against the Column twin.
+# Per-entity array<struct<pred,obj>> of the emitted edges, as ONE parsed SQL
+# expression — the shared construction behind ``emit_triples`` (which
+# explodes it) and stats.top10_all's `predicates` key (which rewraps it per
+# entity, so the 8-key stats query reads the entity relation ONCE instead of
+# unioning a second triples subtree over the same scan).  One py4j round
+# trip: a lambda-built Column version issued ~600 calls of pure
+# plan-construction time per use (guide §1.2).  A pure-Python build of the
+# rules above is pytest-asserted against it.
 _EMPTY_PO = "cast(array() as array<struct<pred:string,obj:string>>)"
 _PO = "named_struct('pred', '{p}', 'obj', {o})".format
 TRIPLE_STRUCTS_SQL = (

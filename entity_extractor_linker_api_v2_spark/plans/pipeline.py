@@ -162,10 +162,13 @@ def pipeline_from_docs(spark: SparkSession, docs: DataFrame, max_entities: int =
     long as the returned frames (Spark's ContextCleaner frees them once
     those are garbage).  A local checkpoint, not a ``persist``: the
     CacheManager matches a persist by plan, so a second call on the same
-    corpus would silently reuse the first call's rows.  The mentions are
-    persisted only while the entities are built (they feed both the
-    distinct-key probe and the join-back) and released before returning;
-    the returned ``mentions`` frame is lazy."""
+    corpus would silently reuse the first call's rows.  The fused branch
+    checkpoints ``fused_lineage``'s entities itself; the composable and
+    generate branches take ``linking.link_mentions``' checkpoint as it
+    is.  On those branches the mentions are persisted only while that call
+    builds the entities (they feed both the distinct-key probe and the
+    join-back) and released before returning; the returned ``mentions``
+    frame is lazy."""
     if mode not in ("extract", "generate"):
         raise ValueError(f"Unknown mode: {mode}")  # ref linker.py:135-137
     if fused and use_html and mode == "extract":
@@ -198,7 +201,7 @@ def pipeline_from_docs(spark: SparkSession, docs: DataFrame, max_entities: int =
                                   text_col=text_col,
                                   split_threshold=split_threshold)
         ments = ments.persist()
-        entities = linking.link_mentions(spark, ments).localCheckpoint()
+        entities = linking.link_mentions(spark, ments)
         ments.unpersist()
     return {
         "docs": docs,

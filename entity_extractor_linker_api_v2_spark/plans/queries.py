@@ -108,10 +108,13 @@ def _entities(spark, sf_dir):
             oldest_dir = next(iter(per))
             _unpersist_entry(per.pop(oldest_dir))
         # persist the mention table: it feeds both the probe-key distinct
-        # and the join-back (avoids re-running the pandas-UDF extraction
-        # chain twice); persist the entity table for the nine consumers.
-        # BOTH frames are tracked so eviction frees both (pre-round-7 the
-        # mention persist was anonymous and survived eviction).
+        # and the join-back while link_mentions builds its entity
+        # checkpoint (avoids re-running the pandas-UDF extraction chain
+        # twice).  The nine consumers already read that checkpoint; the
+        # persist over it is what marks the entry cached (ROADMAP item 8
+        # decides the cache).  BOTH frames are tracked so eviction frees
+        # both (pre-round-7 the mention persist was anonymous and survived
+        # eviction).
         ments = _capped_fused(spark, sf_dir).persist()
         per[sf_dir] = (linking.link_mentions(spark, ments).persist(), ments)
     return per[sf_dir][0]

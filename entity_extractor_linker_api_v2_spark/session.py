@@ -1,7 +1,8 @@
 """SparkSession factory tuned for the KG-construction pipeline.
 
-Defaults are chosen for the local[32] sandbox but are exactly the knobs that
-matter on a 1000-executor cluster: AQE (runtime re-plan + skew-join split),
+Cores and driver heap default to what the host offers (``host_defaults``);
+the other defaults are exactly the knobs that matter on a 1000-executor
+cluster: AQE (runtime re-plan + skew-join split),
 Arrow batching for the pandas-UDF stages, broadcast threshold sized so the KB
 alias/redirect dimensions always broadcast, and shuffle partitions matched to
 parallelism (on a real cluster leave shuffle partitions to AQE coalescing).
@@ -15,13 +16,32 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 
+MAX_DRIVER_HEAP_MB = 16 * 1024
+
+
+def host_defaults(meminfo: str = "/proc/meminfo") -> tuple[int, str]:
+    """(cores, driver heap) of a session on this host: the size of the
+    process's CPU affinity mask, and half of MemTotal capped at 16 GB, so
+    the driver JVM leaves room for the Python workers and the OS on a
+    machine without swap.  ``SPARK_GRAFT_CPUS`` and ``SPARK_DRIVER_MEMORY``
+    override either."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    heap = os.environ.get("SPARK_DRIVER_MEMORY")
+    if heap is None:
+        with open(meminfo) as f:
+            total_kb = next(int(line.split()[1]) for line in f
+                            if line.startswith("MemTotal:"))
+        heap = f"{min(total_kb // 2048, MAX_DRIVER_HEAP_MB)}m"
+    return int(cpus or len(os.sched_getaffinity(0))), heap
+
+
 def get_spark(app_name: str = "eel-v2-spark", master: str | None = None,
               shuffle_partitions: int | None = None,
               extra_conf: dict[str, str] | None = None) -> SparkSession:
     """`extra_conf` entries are applied LAST, so callers can override any
     default (e.g. perfbench/run.py's traced run re-enables the UI for its
     REST-API layer metrics)."""
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus, heap = host_defaults()
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or cpus
     builder = (
@@ -39,7 +59,7 @@ def get_spark(app_name: str = "eel-v2-spark", master: str | None = None,
                 os.environ.get("SPARK_ARROW_BATCH", "8192"))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", heap)
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

@@ -49,17 +49,22 @@ def main() -> None:
         "```\n" + plan_of(fused_lineage(spark, tables.docs_table(spark, SF))[1])
         + "```\n")
 
+    from entity_extractor_linker_api_v2_spark.operators.extract import (
+        extract_and_detect)
+    from entity_extractor_linker_api_v2_spark.operators.linking import (
+        link_mentions_precomputed, resolve_keys)
+    ments = extract_and_detect(tables.docs_table(spark, SF), dedup=True)
+    keys = ments.select("label", "link_lang").distinct()
     sections.append(
         "## Linking (open-vocabulary relational path, q11)\n\n"
-        "Check: the join-back is a BroadcastHashJoin of the mentions with\n"
-        "the resolved keys.  link_mentions resolves the distinct (label,\n"
-        "lang) keys once per call into a local checkpoint, read here as the\n"
-        "Scan ExistingRDD under the BroadcastExchange; that resolution's own\n"
-        "plan (linking.resolve_keys) broadcasts every dimension join.\n"
-        "The InMemoryRelation wrapper is the session-scoped entity cache\n"
-        "(built once, consumed by the nine entity-chain queries); the\n"
-        "cached plan inside it is the one audited here.\n\n"
-        "```\n" + plan_of(QUERIES["q11_entities"](spark, SF)) + "```\n")
+        "Check: every dimension join of the distinct-key resolution and the\n"
+        "join-back of the mentions with the resolved keys are\n"
+        "BroadcastHashJoins; no SortMergeJoin.  link_mentions checkpoints\n"
+        "this lineage, its distinct keys cached, once per call; its\n"
+        "consumers (q11 among them) read that checkpoint as a Scan\n"
+        "ExistingRDD, so the lazy lineage is audited here.\n\n"
+        "```\n" + plan_of(link_mentions_precomputed(
+            ments, resolve_keys(spark, keys))) + "```\n")
 
     sections.append(
         "## MinHash signatures (q22)\n\n"

@@ -234,41 +234,62 @@ def test_variation_array_matches_refsem_on_tricky_names(spark):
         assert got[n] == refsem.name_variations(n), (n, got[n], refsem.name_variations(n))
 
 
-def test_argmin_sql_twin_matches_column_twin(spark):
+def test_argmin_sql_matches_numpy_argmin(spark):
     """_argmin_sql (the one-parse construction the IVF/kmeans paths use)
-    must produce the identical (m, centroid_id) struct as the Column-built
-    _argmin_centroid over real embeddings — float-exact, both fields."""
-    from pyspark.sql import functions as F
+    must give each real embedding the (m, centroid_id) of a numpy argmin
+    over the same centroids: centroid_id exact (ties to the smallest id),
+    m exact under the same sequential float64 sum of float64 products."""
+    import numpy as np
 
     from entity_extractor_linker_api_v2_spark.operators import similarity as S
     from entity_extractor_linker_api_v2_spark.sources import tables
 
     df = tables.load(spark, "/root/testdata/sf0.001", "embeddings")
     cents = S._collect_centroids(S.default_centroids(df))
-    m, cid = S._argmin_centroid("embedding", cents, S._neg_dot_lit)
-    col_rows = df.select("vec_id", m.alias("m"),
-                         cid.alias("centroid_id")).collect()
     sql_rows = df.selectExpr(
-        "vec_id",
+        "vec_id", "embedding",
         S._argmin_sql("embedding", cents, S._neg_dot_sql) + " AS b"
-    ).selectExpr("vec_id", "b.m AS m", "b.centroid_id AS centroid_id").collect()
-    assert sorted(map(tuple, col_rows)) == sorted(map(tuple, sql_rows))
+    ).selectExpr("vec_id", "embedding", "b.m AS m",
+                 "b.centroid_id AS centroid_id").collect()
+    assert sql_rows
+    emb = np.array([r.embedding for r in sql_rows], dtype=np.float64)
+    cmat = np.array([cv for _, cv in cents], dtype=np.float64)
+    cids = np.array([cid for cid, _ in cents])
+    # cumsum accumulates left to right, as aggregate() does (np.sum would
+    # sum pairwise and round differently)
+    neg_dot = -np.cumsum(emb[:, None, :] * cmat[None, :, :], axis=2)[..., -1]
+    best = neg_dot.argmin(axis=1)  # first minimum = smallest centroid_id
+    want = [(r.vec_id, float(neg_dot[i, best[i]]), int(cids[best[i]]))
+            for i, r in enumerate(sql_rows)]
+    assert [(r.vec_id, r.m, r.centroid_id) for r in sql_rows] == want
 
 
-def test_triple_structs_sql_twin_matches_column_twin(spark):
+def test_triple_structs_sql_matches_python_edges(spark):
     """TRIPLE_STRUCTS_SQL (the one-parse construction q12/q15/q16 use) must
-    produce the identical per-entity edge array as the Column-built
-    triple_structs, element for element, over the real entity relation."""
+    produce, element for element, the per-entity edge array that the rules
+    of the triples module docstring give in pure Python, over the real
+    entity relation."""
     from pyspark.sql import functions as F
 
     from entity_extractor_linker_api_v2_spark.operators import triples as TR
     from entity_extractor_linker_api_v2_spark.plans.queries import _entities
 
-    e = _entities(spark, "/root/testdata/sf0.001")
-    col_rows = e.select("url", "label", TR.triple_structs(e).alias("arr")).collect()
-    sql_rows = e.select("url", "label",
-                        F.expr(TR.TRIPLE_STRUCTS_SQL).alias("arr")).collect()
-    assert sorted(map(tuple, col_rows)) == sorted(map(tuple, sql_rows))
+    def edges(r):
+        out = [("instance_of", r.type)]
+        out += [("same_as", v) for v in (r.wikidata_id, r.dbpedia_uri) if v != ""]
+        out += [("has_category", c) for c in r.categories]
+        out += [("links_to", x) for x in r.internal_links]
+        out += [("part_of", x) for x in r.part_of]
+        out += [("has_part", x) for x in r.has_part]
+        if r.geo_lat is not None and r.geo_lon is not None:
+            out.append(("located_at", f"{r.geo_lat},{r.geo_lon}"))
+        return out
+
+    rows = _entities(spark, "/root/testdata/sf0.001").select(
+        "*", F.expr(TR.TRIPLE_STRUCTS_SQL).alias("arr")).collect()
+    assert rows and any(r.geo_lat is not None for r in rows)
+    for r in rows:
+        assert [tuple(t) for t in r.arr] == edges(r), (r.url, r.label)
 
 
 def test_ivf_topk_with_prebuilt_index_matches_inline(spark):

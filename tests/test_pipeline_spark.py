@@ -1,6 +1,9 @@
 """End-to-end Spark pipeline tests: golden-triple P/R, byte-identical text,
 per-operator behaviors that aren't SQL-expressible."""
 
+import io
+from contextlib import redirect_stdout
+
 import duckdb
 import pytest
 
@@ -201,38 +204,59 @@ def test_replicate_guard_matches_url_namespace(spark):
         tables.replicate_documents(df, 11)
 
 
+def _plan(df) -> str:
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain()
+    return buf.getvalue()
+
+
+def _cache_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _jobs(spark, group, action):
+    """(action's result, the number of Spark jobs it ran), counted
+    through a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        result = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _write_outputs(out, tmp_path):
+    """Write the three sinks and collect the four stats of a pipeline
+    output dict."""
+    for name in ("entities", "triples", "nodes"):
+        out[name].write.mode("overwrite").parquet(str(tmp_path / name))
+    for name in ("types_distribution", "top10_categories",
+                 "linked_stats", "extraction_stats"):
+        out[name].collect()
+
+
 def test_pipeline_materializes_each_layer_once_per_call(spark):
     """pipeline_from_docs runs its layers at call time, once per call: the
     returned entities are a checkpoint scan (writing the sinks and
     collecting the stats cannot rerun extraction), a second call on the
     same docs computes afresh instead of reusing the first call's rows, and
     no call leaves anything in Spark's CacheManager."""
-    import io
-    from contextlib import redirect_stdout
-
     from entity_extractor_linker_api_v2_spark.operators import linking
     from entity_extractor_linker_api_v2_spark.plans.pipeline import (
         pipeline_from_docs)
     from entity_extractor_linker_api_v2_spark.sources import tables
 
-    def plan(df):
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain()
-        return buf.getvalue()
-
     def rdd_id(df):  # a checkpointed frame's logical plan is one LogicalRDD
         return df._jdf.queryExecution().logical().rdd().id()
-
-    def cache_empty():
-        return spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
     spark.catalog.clearCache()  # other tests' caches share this session
     docs = tables.docs_table(spark, SF_SMALL)
     first = pipeline_from_docs(spark, docs, fused=True)
-    assert "MapInPandas" not in plan(first["entities"])
+    assert "MapInPandas" not in _plan(first["entities"])
     for name in ("triples", "nodes", "types_distribution", "linked_stats"):
-        assert "MapInPandas" not in plan(first[name]), name
+        assert "MapInPandas" not in _plan(first[name]), name
 
     sc = spark.sparkContext
     sc.setJobGroup("second-call", "second pipeline_from_docs call")
@@ -244,15 +268,15 @@ def test_pipeline_materializes_each_layer_once_per_call(spark):
     assert rdd_id(second["entities"]) != rdd_id(first["entities"])
     assert sorted(map(tuple, first["entities"].collect())) == \
         sorted(map(tuple, second["entities"].collect()))
-    assert cache_empty()
+    assert _cache_empty(spark)
 
     composable = pipeline_from_docs(spark, docs)
-    assert "ArrowEvalPython" not in plan(composable["entities"])
-    assert cache_empty()
+    assert "ArrowEvalPython" not in _plan(composable["entities"])
+    assert _cache_empty(spark)
     ments = composable["mentions"]
     assert linking.link_mentions(spark, ments).count() == \
         composable["entities"].count()
-    assert cache_empty()
+    assert _cache_empty(spark)
 
 
 def test_pipeline_job_counts(spark, tmp_path):
@@ -267,30 +291,13 @@ def test_pipeline_job_counts(spark, tmp_path):
         pipeline_from_docs)
     from entity_extractor_linker_api_v2_spark.sources import tables
 
-    sc = spark.sparkContext
     docs = tables.docs_table(spark, SF_SMALL)
-
-    def jobs(group, action):
-        sc.setJobGroup(group, group)
-        try:
-            result = action()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return result, len(sc.statusTracker().getJobIdsForGroup(group))
-
-    out, call_jobs = jobs("job-count-call",
-                          lambda: pipeline_from_docs(spark, docs, fused=True))
-
-    def outputs():
-        for name in ("entities", "triples", "nodes"):
-            out[name].write.mode("overwrite").parquet(str(tmp_path / name))
-        for name in ("types_distribution", "top10_categories",
-                     "linked_stats", "extraction_stats"):
-            out[name].collect()
-
-    _, output_jobs = jobs("job-count-outputs", outputs)
-    _, types_jobs = jobs("job-count-types",
-                         lambda: S.types_distribution(out["entities"]).collect())
+    out, call_jobs = _jobs(spark, "job-count-call",
+                           lambda: pipeline_from_docs(spark, docs, fused=True))
+    _, output_jobs = _jobs(spark, "job-count-outputs",
+                           lambda: _write_outputs(out, tmp_path))
+    _, types_jobs = _jobs(spark, "job-count-types",
+                          lambda: S.types_distribution(out["entities"]).collect())
     assert (call_jobs, output_jobs, types_jobs) == (8, 13, 2)
 
 
@@ -299,14 +306,9 @@ def _canonical_entities_jobs(spark, entities, group):
     from entity_extractor_linker_api_v2_spark.operators.canonicalize import (
         canonical_entities)
 
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        rows = canonical_entities(entities).collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    rows, n = _jobs(spark, group, lambda: canonical_entities(entities).collect())
     assert rows
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    return n
 
 
 def test_canonical_entities_job_count(spark):
@@ -343,3 +345,41 @@ def test_canonical_entities_bridge_job_count(spark, bridges, want):
         "label string, label_de string, wikidata_id string").localCheckpoint()
     assert _canonical_entities_jobs(
         spark, entities, f"job-count-canonical-{bridges}") == want
+
+
+def test_link_mentions_job_counts(spark, tmp_path):
+    """The Spark jobs of one link_mentions call on the persisted SF_SMALL
+    mentions in the test session, and of writing its entities, triples and
+    nodes and collecting the four stats (the composable path perfbench's
+    entity_dense job runs), pinned: 10 for the call, 13 for the outputs.
+    The call materializes the entity relation, so the outputs re-run no
+    resolution broadcast and no join-back: with only the resolved keys
+    checkpointed, the call took 9 jobs and the outputs 27.  The returned
+    entities are a checkpoint scan, and the call leaves the CacheManager
+    empty."""
+    from entity_extractor_linker_api_v2_spark.operators import (
+        linking, stats as S, triples as T)
+    from entity_extractor_linker_api_v2_spark.operators.extract import (
+        extract_and_detect)
+    from entity_extractor_linker_api_v2_spark.sources import tables
+
+    spark.catalog.clearCache()  # other tests' caches share this session
+    ments = extract_and_detect(tables.docs_table(spark, SF_SMALL),
+                               dedup=True).persist()
+    ments.count()
+    try:
+        e, call_jobs = _jobs(spark, "link-count-call",
+                             lambda: linking.link_mentions(spark, ments))
+    finally:
+        ments.unpersist()
+    assert _cache_empty(spark)
+    assert "BroadcastHashJoin" not in _plan(e)
+    out = {"entities": e, "triples": T.emit_triples(e),
+           "nodes": T.nodes_table(e),
+           "types_distribution": S.types_distribution(e),
+           "top10_categories": S.top10(e, "categories"),
+           "linked_stats": S.linked_stats(e),
+           "extraction_stats": S.extraction_stats(e)}
+    _, output_jobs = _jobs(spark, "link-count-outputs",
+                           lambda: _write_outputs(out, tmp_path))
+    assert (call_jobs, output_jobs) == (10, 13)

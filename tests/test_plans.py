@@ -35,19 +35,18 @@ def _is_scan_floor(plan: str, tree_line: str) -> bool:
 
 def test_linking_joins_are_broadcast(spark):
     """All dimension joins in the linking stage must be broadcast — a
-    sort-merge join on the probe side would shuffle the corpus.  The
-    key resolution is checkpointed inside link_mentions, so its lazy
-    lineage (resolve_keys) is audited on its own."""
+    sort-merge join on the probe side would shuffle the corpus.
+    link_mentions checkpoints its entity relation, so the lazy lineage it
+    materializes (the join-back over resolve_keys) is audited."""
     from entity_extractor_linker_api_v2_spark.operators import linking
     from entity_extractor_linker_api_v2_spark.operators.extract import extract_and_detect
-    from entity_extractor_linker_api_v2_spark.plans.queries import q_entities
     from entity_extractor_linker_api_v2_spark.sources import tables
-    keys = extract_and_detect(tables.docs_table(spark, SF_SMALL), dedup=True) \
-        .select("label", "link_lang").distinct()
-    for plan in (_plan(q_entities(spark, SF_SMALL)),
-                 _plan(linking.resolve_keys(spark, keys))):
-        assert "BroadcastHashJoin" in plan
-        assert "SortMergeJoin" not in plan
+    ments = extract_and_detect(tables.docs_table(spark, SF_SMALL), dedup=True)
+    keys = ments.select("label", "link_lang").distinct()
+    plan = _plan(linking.link_mentions_precomputed(
+        ments, linking.resolve_keys(spark, keys)))
+    assert "BroadcastHashJoin" in plan
+    assert "SortMergeJoin" not in plan
 
 
 
